@@ -696,10 +696,14 @@ object QueriesWindows {
     // bucketed two-pass tier: per-bucket windows + broadcast prefix
     // offsets, never a single-partition WindowExec (plan-locked in
     // PlanShapeSpec). Exact-integer cents keep the FP hash stable where
-    // prefix sums would otherwise reassociate summation. Since round 11
-    // these go through the DSL entry points (Windows.cumDF/rleid/
-    // frankNa/shiftDF/frollDF/nafillDF with by=Nil), which AUTO-ROUTE
-    // to the tier — the same call a user would write. ==================
+    // prefix sums would otherwise reassociate summation. Most go through
+    // the DSL entry points (Windows.cumDF/rleid/frankNa/shiftDF/shiftN/
+    // frollDF/nafillDF with by=Nil), which AUTO-ROUTE to the tier — the
+    // same call a user would write. Five put several ops of one family
+    // in one call and so call the tier's multi-op forms directly, since
+    // a DSL call routes one op: q_frank_global, q_frank_multi_global
+    // (frankMulti), q_shift_global (shiftMulti), q_nafill_global
+    // (nafill) and q_cumminmax_global (cum). ===========================
 
     // ---- global running sum (Windows.cumDF("sum") with by=Nil) ---------
     ("q_cumsum_global", ((s, dir) =>
@@ -776,12 +780,7 @@ object QueriesWindows {
       val base = dt(s, dir, "events").df
         .withColumn("v", when(col("event_type") === "error", lit(null))
           .otherwise(col("value")))
-      // ONE fused multi-ties pass (optimization r22): min/dense/average
-      // share the (_pn, _pd) bucket offsets, so one bucketing + one
-      // partials aggregation + one join ranks all three — the former
-      // chained frankNa trio paid a full-data bucket exchange per ties
-      // method (plan: 3 bucket exchanges -> 1; oracle-identical — same
-      // rank expressions and na.last="true" placement as frankNa)
+      // one multi-ties pass: min/dense/average share the bucket offsets
       val r3 = graft.operators.GlobalOrdered.frankMulti(base, col("v"),
         desc = false, Seq(("min", "rk_min"), ("dense", "rk_dense"),
           ("average", "rk_avg")), naLast = "true")
@@ -804,10 +803,10 @@ object QueriesWindows {
     ("q_frank_multi_global", ((s, dir) => {
       val base = dt(s, dir, "events").df
         .withColumn("vb", floor(col("value")).cast("long"))
-      // fused multi-ties pass over the (vb asc, event_type desc) vector —
+      // multi-ties pass over the (vb asc, event_type desc) vector —
       // same translation Windows.frank(by=Nil) applies (head column
       // buckets, na.last="true" from asc_nulls_last, secondary desc →
-      // more=(col, true)); 3 bucket exchanges -> 1 (optimization r22)
+      // more=(col, true))
       val r3 = graft.operators.GlobalOrdered.frankMulti(base, col("vb"),
         desc = false, Seq(("min", "rk_min"), ("dense", "rk_dense"),
           ("average", "rk_avg")), naLast = "true",
@@ -828,12 +827,7 @@ object QueriesWindows {
     // ---- global shift: phantom boundary rows feed lag/lead -------------
     ("q_shift_global", ((s, dir) => {
       val base = dt(s, dir, "orders").df
-      // ONE shiftMulti pass (optimization r21): lag+lead over the same
-      // unique global order are independent, so one bucketing + one
-      // phantom union + one WindowExec computes both — the former
-      // chained shiftDF pair paid a second full-data exchange and
-      // window pass for the lead (plan: 2 bucket exchanges -> 1;
-      // oracle-identical, same lag/lead + fill semantics)
+      // lag and lead in one bucketing + one phantom union
       graft.operators.GlobalOrdered.shiftMulti(base,
           Seq(("prev_price", col("o_totalprice"), 1, lit(0.0)),
             ("next_price", col("o_totalprice"), -1, lit(0.0))),
@@ -884,14 +878,9 @@ object QueriesWindows {
       val base = dt(s, dir, "events").df
         .withColumn("v", when(col("event_type") === "error", lit(null))
           .otherwise(col("value")))
-      // ONE fused locf+nocb pass (optimization r22): both carries read
-      // the RAW v, so one bucketing + one partials aggregation + one
-      // join computes both — the former chained nafillDF pair paid a
-      // second full-data bucket exchange and join for the nocb (plan:
-      // 2 bucket exchanges -> 1; oracle-identical, same carry
-      // semantics as nafillDF(locf) ∘ nafillDF(nocb))
-      graft.operators.GlobalOrdered.nafillLocfNocb(base, col("v"),
-          col("event_id"), "locf", "nocb", nullsFirst = Some(true))
+      // locf and nocb in one bucketing (both carries read the raw v)
+      graft.operators.GlobalOrdered.nafill(base, col("v"),
+          col("event_id"), Some("locf"), Some("nocb"), nullsFirst = Some(true))
         .select(col("event_id"), col("locf"), col("nocb"))
     }): Q,
       Some("""SELECT event_id,
@@ -1031,23 +1020,15 @@ object QueriesWindows {
              |FROM base a LEFT JOIN base b ON b.rn = a.rn - a.an""".stripMargin)),
 
     // ---- global running max/min via the DSL (round 11) -----------------
-    // cumDF("max", naRm=true) = skip-null SQL semantics; cumDF("min")
-    // default = NA-poison from the first null onward — both through the
-    // GlobalOrdered.cumMinMax prefix tier (no FP reassociation: min/max
-    // are order-free).
+    // max with naRm = skip-null SQL semantics; min without = NA-poison
+    // from the first null onward — both in one GlobalOrdered.cum call
+    // (no FP reassociation: min/max are order-free).
     ("q_cumminmax_global", ((s, dir) => {
       val base = dt(s, dir, "orders").df
         .withColumn("v", when(col("o_orderkey") % 97 === 0,
           lit(null).cast("double")).otherwise(col("o_totalprice")))
-      // ONE fused min+max pass (optimization r22): the running extremes
-      // are independent, so one bucketing + one partials aggregation +
-      // one join computes both — the former chained cumDF pair paid a
-      // second full-data bucket exchange and join for the min (plan:
-      // 2 bucket exchanges -> 1; oracle-identical, same naRm/poison
-      // gates as cumDF("max", naRm=true) ∘ cumDF("min"))
-      graft.operators.GlobalOrdered.cumMinMaxMulti(base, col("v"),
-          col("o_orderkey"),
-          Seq(("cmax_narm", false, true), ("cmin_poison", true, false)),
+      graft.operators.GlobalOrdered.cum(base, col("v"), col("o_orderkey"),
+          Seq(("max", true, "cmax_narm"), ("min", false, "cmin_poison")),
           nullsFirst = Some(true))
         .select(col("o_orderkey"), col("cmax_narm"), col("cmin_poison"))
     }): Q,

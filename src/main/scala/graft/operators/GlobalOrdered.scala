@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 /** Scale-safe GLOBAL ordered operators — the `by = Nil` tier of the
   * window family (SURVEY.md §2.5; reference src/forder.c's parallel
@@ -135,8 +135,8 @@ object GlobalOrdered {
     * bucket d's minimum is ≈ bounds(d−1), so the rows copied into
     * bucket d are the F-mass of [min_d − reach, min_d). Local calendar
     * windows sum to ≲1; a reach spanning the axis sums to ~buckets/2.
-    */
-  /** NUMERIC axes only: integer/decimal bounds widen to double; a
+    *
+    * NUMERIC axes only: integer/decimal bounds widen to double; a
     * non-numeric bound type (nothing [[frolladapt]] accepts — its reach
     * arithmetic is numeric — but callers could hand-roll one) yields an
     * empty sample and estimate 0.0, i.e. the phantom guard deliberately
@@ -202,11 +202,6 @@ object GlobalOrdered {
     vals.sortWith(lt)
   }
 
-  /** RAW bucket bounds (duplicates kept — they are the skew signal):
-    * one-pass approxQuantile for numeric keys; a bounded deterministic
-    * sample (≤~200k values, seed-pinned) sorted driver-side for any
-    * other orderable type.
-    */
   /** The one-column frame a fit scans (numeric keys cast to double for
     * approxQuantile), plus whether the key is numeric — shared between
     * [[boundsFor]] and the [[aliasFit]] memo-key computation so the two
@@ -260,14 +255,17 @@ object GlobalOrdered {
       df.queryExecution.analyzed.semanticHash().toString + ":" +
       keyText(df, key) + ":" + buckets
 
+  /** RAW bucket bounds (duplicates kept — they are the skew signal):
+    * one-pass approxQuantile for numeric keys; a bounded deterministic
+    * sample (≤~200k values, seed-pinned) sorted driver-side for any
+    * other orderable type.
+    */
   private def boundsFor(df: DataFrame, key: Column,
                         buckets: Int): (Array[Any], String) = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val memoKey = fitKeyOf(df, key, buckets)
     (boundsCache.getOrElsePut(memoKey) {
       fitScans.incrementAndGet()
-      if (sys.env.contains("GRAFT_FIT_DEBUG"))
-        System.err.println(s"[fitdebug] MISS key=$memoKey")
       val (frame, numeric) = fitFrame(df, key)
       // buckets=1 needs no bounds at all (and approxQuantile returns
       // null for an empty probability array rather than an empty one)
@@ -352,6 +350,18 @@ object GlobalOrdered {
   private case class Prepped(b: DataFrame, ords: Seq[Column],
                              fit: Option[(Array[Any], Int)] = None)
 
+  /** Resolve the bucket/partition count: callers pass 0 (the default)
+    * to track `spark.sql.shuffle.partitions` — a hardcoded constant
+    * would cap the tier's parallelism on a real cluster where shuffle
+    * partitions are sized to the data (locally both are 32) — clamped
+    * to [[MAX_BUCKETS]] so an aggressive partitions config can't blow
+    * up the cross-bucket bookkeeping frames.
+    */
+  private def effBuckets(df: DataFrame, buckets: Int): Int =
+    if (buckets > 0) buckets
+    else math.min(MAX_BUCKETS, math.max(1,
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt))
+
   /** df + the bucket column (asc defaults to Spark's nulls-first,
     * desc to nulls-last, overridable for frank's na.last=), with skew
     * degeneracy detection: raw quantile bounds that are mostly
@@ -366,18 +376,6 @@ object GlobalOrdered {
     * Ops that pin tie blocks to one bucket (frank/rleid/nafill) keep
     * the collapsed-but-correct buckets.
     */
-  /** Resolve the bucket/partition count: callers pass 0 (the default)
-    * to track `spark.sql.shuffle.partitions` — a hardcoded constant
-    * would cap the tier's parallelism on a real cluster where shuffle
-    * partitions are sized to the data (locally both are 32) — clamped
-    * to [[MAX_BUCKETS]] so an aggressive partitions config can't blow
-    * up the cross-bucket bookkeeping frames.
-    */
-  private def effBuckets(df: DataFrame, buckets: Int): Int =
-    if (buckets > 0) buckets
-    else math.min(MAX_BUCKETS, math.max(1,
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt))
-
   private def prep(df: DataFrame, key: Column, asc: Boolean, buckets0: Int,
                    nullsFirst: Option[Boolean] = None,
                    tieAgnostic: Boolean = false): Prepped = {
@@ -464,11 +462,13 @@ object GlobalOrdered {
     * agg is an aggregate function over a partials column, paired with
     * its output name.
     */
-  private def priorsOf(partials: DataFrame, aggs: (Column, String)*): DataFrame = {
-    val w = partialsWindow.rowsBetween(Window.unboundedPreceding, -1)
+  private def priorsOf(partials: DataFrame, aggs: (Column, String)*): DataFrame =
     partials.select(
-      col("_b") +: aggs.map { case (a, n) => a.over(w).as(n) }: _*)
-  }
+      col("_b") +: aggs.map { case (a, n) => a.over(priorBuckets).as(n) }: _*)
+
+  /** The STRICTLY-PRIOR frame over the partials window. */
+  private def priorBuckets: WindowSpec =
+    partialsWindow.rowsBetween(Window.unboundedPreceding, -1)
 
   /** Register `out`'s key-plan as an ALIAS of the fit that bucketed its
     * input: every global op is row-preserving, so the output's key
@@ -488,44 +488,125 @@ object GlobalOrdered {
   private def joinPriors(b: DataFrame, priors: DataFrame): DataFrame =
     b.join(broadcast(priors), col(BKT) === col("_b"), "left").drop("_b")
 
-  /** `j.withColumn(out, res).drop(dropCols…)` as ONE projection — each
-    * withColumn/drop is a full analyzer pass over the plan, and on the
-    * tier's joined frames the pair was a visible slice of the per-rep
-    * driver-side build cost (optimization r21). Mirrors withColumn's
-    * replace-in-place position when `out` already exists.
+  /** The within-bucket window: partitioned by the bucket, ordered by the
+    * prepped order (key, plus the content-hash tie-break after a skew
+    * reroute). Every per-bucket pass of the tier runs over it.
     */
-  private def withOutDropped(j: DataFrame, out: String, res: Column,
-                             dropCols: Seq[String]): DataFrame = {
-    val dropSet = dropCols.toSet
-    val keep = j.columns.filterNot(dropSet)
-    val projected: Seq[Column] =
-      if (keep.contains(out))
-        keep.toSeq.map(c => if (c == out) res.as(out) else col(c))
-      else keep.toSeq.map(col) :+ res.as(out)
-    j.select(projected: _*)
+  private def bucketWindow(ords: Seq[Column]): WindowSpec =
+    Window.partitionBy(col(BKT)).orderBy(ords: _*)
+
+  /** `outs` written over `j` with `dropCols` removed, as ONE projection
+    * (each withColumn/drop is a full analyzer pass over the plan). An
+    * `out` that already exists is replaced in place, like withColumn;
+    * new ones are appended in order.
+    */
+  private def withOuts(j: DataFrame, outs: Seq[(String, Column)],
+                       dropCols: Seq[String]): DataFrame = {
+    val byName = outs.toMap
+    val keep = j.columns.toSeq.filterNot(dropCols.toSet)
+    j.select(keep.map(c => byName.get(c).fold(col(c))(_.as(c))) ++
+      outs.collect { case (o, r) if !keep.contains(o) => r.as(o) }: _*)
   }
 
-  /** Null-tolerant add: null + x = x, x + null = x, null + null = null
-    * (each side is an already-aggregated partial; a missing side means
-    * "no rows", not poison — poison is tracked separately).
+  /** Null-tolerant combine: null ∘ x = x, x ∘ null = x, null ∘ null =
+    * null (each side is an already-aggregated partial; a missing side
+    * means "no rows", not poison — poison is tracked separately).
+    * `+` alone would poison on a null side; least/greatest would not,
+    * but share the one shape.
     */
-  private def addNT(a: Column, b: Column): Column =
-    when(a.isNull, b).when(b.isNull, a).otherwise(a + b)
+  private def combineNT(a: Column, b: Column)(f: (Column, Column) => Column): Column =
+    when(a.isNull, b).when(b.isNull, a).otherwise(f(a, b))
 
-  // ---- cumulative sum (global tier of Windows.cum("sum")) -------------
+  // ---- cumulative sum/prod/min/max (global tier of Windows.cum) ------
 
-  /** Global running sum of `x` along `key` — semantics of
-    * `Windows.cum("sum", x, by = Nil, ...)` (NA-poison by default,
-    * naRm=true opts into skip-NULL SQL aggregation) without the
-    * single-partition WindowExec.
+  /** One fn's prefix carry: its per-bucket partials as (name, aggregate
+    * over the bucket's rows, aggregate combining the partials of prior
+    * buckets), and its running value from the carried partials (columns
+    * of the same names after the join) and the within-bucket window.
     */
-  def cumsum(df: DataFrame, x: Column, key: Column, out: String,
-             asc: Boolean = true, naRm: Boolean = false,
-             buckets: Int = 0,
-             nullsFirst: Option[Boolean] = None): DataFrame = {
+  private case class CumCarry(partials: Seq[(String, Column, Column => Column)],
+                              value: WindowSpec => Column)
+
+  /** The carry of `fn` ∈ sum | prod | min | max over `x`.
+    *
+    * prod is the log-space sign/zero/null tracked form of
+    * `Windows.cum("prod")`: zero count, negative count and log-magnitude
+    * sum. FP contract (like sum's reassociation note): the magnitude is
+    * exp(Σ log|x|), NOT a sequential multiply — for general magnitudes
+    * the two accumulate rounding differently (and saturate to
+    * Inf/underflow to 0 at different prefixes), so bit-parity with
+    * `cum("prod_exact")` holds only for exactly-representable factor
+    * sets (±1/0, powers of two). This is the same trade
+    * `Windows.cum("prod")` documents — log-space is what makes the
+    * running product O(n) and prefix-combinable; use `prod_exact` (and
+    * its sequential cost) where bitwise parity matters.
+    */
+  private def cumCarry(fn: String, x: Column): CumCarry = fn match {
+    case "sum" =>
+      CumCarry(Seq(("_ps", sum(x), sum(_))),
+        wc => combineNT(col("_ps"), sum(x).over(wc))(_ + _))
+    case "min" | "max" =>
+      val agg: Column => Column = if (fn == "min") min(_) else max(_)
+      val pick: (Column, Column) => Column =
+        if (fn == "min") least(_, _) else greatest(_, _)
+      val pm = s"_p$fn"
+      CumCarry(Seq((pm, agg(x), agg)),
+        wc => combineNT(col(pm), agg(x).over(wc))(pick))
+    case "prod" =>
+      val xd = x.cast("double")
+      val zero = when(xd === 0.0, 1L).otherwise(0L)
+      val neg = when(xd < 0.0, 1L).otherwise(0L)
+      val logAbs = when(xd =!= 0.0, log(abs(xd)))
+      CumCarry(Seq(("_pz", sum(zero), sum(_)), ("_pneg", sum(neg), sum(_)),
+        ("_plog", sum(logAbs), sum(_))), { wc =>
+        val zeros = coalesce(col("_pz"), lit(0L)) + sum(zero).over(wc)
+        val negs = coalesce(col("_pneg"), lit(0L)) + sum(neg).over(wc)
+        val logMag = combineNT(col("_plog"), sum(logAbs).over(wc))(_ + _)
+        when(zeros > 0, lit(0.0))
+          .otherwise(when(negs % 2 === 0, lit(1.0)).otherwise(lit(-1.0)) *
+            exp(coalesce(logMag, lit(0.0))))
+      })
+    case other => throw new IllegalArgumentException(
+      s"cum($other) has no global tier (exact sequential FP is " +
+        "inherently single-stream); pass allowGlobal=true for " +
+        "provably-small frames")
+  }
+
+  /** Global running aggregates of `x` along `key` — per op
+    * `(fn, naRm, out)` the semantics of `Windows.cum(fn, x, by = Nil,
+    * ...)` (NA-poison by default, naRm=true opts into skip-NULL SQL
+    * aggregation) without the single-partition WindowExec. All ops share
+    * ONE bucketing, ONE partials aggregation and ONE broadcast join, and
+    * their within-bucket windows share partitioning and ordering, so
+    * Catalyst plans one WindowExec for all of them (the running extremes,
+    * sums and products are independent of each other).
+    */
+  def cum(df: DataFrame, x: Column, key: Column,
+          ops: Seq[(String, Boolean, String)], asc: Boolean = true,
+          buckets: Int = 0, nullsFirst: Option[Boolean] = None): DataFrame = {
+    require(ops.nonEmpty, "cum needs at least one op")
+    // an fn without a global tier fails here, before the eager bounds fit
+    val carries = ops.map(_._1).distinct.map(fn => fn -> cumCarry(fn, x))
     val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    aliasFit(cumsumBucketed(p, x, out, naRm), key, p)
+    aliasFit(cumBucketed(p, x, carries, ops), key, p)
   }
+
+  def cumsum(df: DataFrame, x: Column, key: Column, out: String,
+             asc: Boolean = true, naRm: Boolean = false, buckets: Int = 0,
+             nullsFirst: Option[Boolean] = None): DataFrame =
+    cum(df, x, key, Seq(("sum", naRm, out)), asc, buckets, nullsFirst)
+
+  def cumprod(df: DataFrame, x: Column, key: Column, out: String,
+              asc: Boolean = true, naRm: Boolean = false, buckets: Int = 0,
+              nullsFirst: Option[Boolean] = None): DataFrame =
+    cum(df, x, key, Seq(("prod", naRm, out)), asc, buckets, nullsFirst)
+
+  def cumMinMax(df: DataFrame, x: Column, key: Column, out: String,
+                isMin: Boolean, asc: Boolean = true, naRm: Boolean = false,
+                buckets: Int = 0,
+                nullsFirst: Option[Boolean] = None): DataFrame =
+    cum(df, x, key, Seq((if (isMin) "min" else "max", naRm, out)), asc,
+      buckets, nullsFirst)
 
   /** [[cumsum]] with a CALLER-SUPPLIED bucket expression — any pure,
     * sort-monotone function of the key (e.g. `floor(-logw)` for a
@@ -537,204 +618,71 @@ object GlobalOrdered {
   def cumsumWith(df: DataFrame, x: Column, key: Column, bucket: Column,
                  out: String, asc: Boolean = true,
                  naRm: Boolean = false): DataFrame =
-    cumsumBucketed(Prepped(df.withColumn(BKT, bucket),
-      Seq(ordOf(key, asc, nullsFirst = asc))), x, out, naRm)
+    cumBucketed(Prepped(df.withColumn(BKT, bucket),
+      Seq(ordOf(key, asc, nullsFirst = asc))), x,
+      Seq("sum" -> cumCarry("sum", x)), Seq(("sum", naRm, out)))
 
-  private def cumsumBucketed(p: Prepped, x: Column, out: String,
-                             naRm: Boolean): DataFrame = {
-    val b = p.b
-    val wc = Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val partials = b.groupBy(col(BKT).as("_b"))
-      .agg(sum(x).as("_ps"), count(x).as("_pnn"), count(lit(1)).as("_pn"))
-    val priors = priorsOf(partials,
-      sum(col("_ps")) -> "_ps", sum(col("_pnn")) -> "_pnn",
-      sum(col("_pn")) -> "_pn")
-    val j = joinPriors(b, priors)
-    val within = sum(x).over(wc)
-    val value = addNT(col("_ps"), within)
-    val nnPfx = coalesce(col("_pnn"), lit(0L)) + count(x).over(wc)
-    val nPfx = coalesce(col("_pn"), lit(0L)) + count(lit(1)).over(wc)
-    val res =
-      if (naRm) when(nnPfx === 0, lit(null)).otherwise(value)
-      else when(nnPfx < nPfx, lit(null)).otherwise(value)
-    withOutDropped(j, out, res, Seq(BKT, TB, "_ps", "_pnn", "_pn"))
-  }
-
-  // ---- cumulative min/max (global tier of Windows.cum("min"/"max")) ---
-
-  /** Global running min/max along `key` — `Windows.cum("min"|"max")`
-    * semantics (NA-poison default, naRm opt-in) via per-bucket partials
-    * combined with a null-tolerant least/greatest carry.
+  /** The prefix-carry skeleton: per-bucket partials of every carry plus
+    * the non-null and row counts, their sums over strictly-prior buckets
+    * joined back, and per op the carried running value behind the
+    * NA-poison (or, with naRm, all-NA) gate.
     */
-  def cumMinMax(df: DataFrame, x: Column, key: Column, out: String,
-                isMin: Boolean, asc: Boolean = true, naRm: Boolean = false,
-                buckets: Int = 0,
-                nullsFirst: Option[Boolean] = None): DataFrame = {
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val b = p.b
-    val wc = Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val agg: Column => Column = if (isMin) min else max
-    val partials = b.groupBy(col(BKT).as("_b"))
-      .agg(agg(x).as("_pm"), count(x).as("_pnn"), count(lit(1)).as("_pn"))
-    val priors = priorsOf(partials,
-      agg(col("_pm")) -> "_pm", sum(col("_pnn")) -> "_pnn",
-      sum(col("_pn")) -> "_pn")
-    val j = joinPriors(b, priors)
-    val within = agg(x).over(wc)
-    val combine = if (isMin) least(col("_pm"), within) else greatest(col("_pm"), within)
-    // least/greatest skip nulls only between non-null args; make the
-    // carry null-tolerant like addNT (a missing side means "no rows")
-    val value = when(col("_pm").isNull, within)
-      .when(within.isNull, col("_pm")).otherwise(combine)
+  private def cumBucketed(p: Prepped, x: Column, carries: Seq[(String, CumCarry)],
+                          ops: Seq[(String, Boolean, String)]): DataFrame = {
+    val wc = bucketWindow(p.ords).rowsBetween(Window.unboundedPreceding, 0)
+    val parts = carries.flatMap(_._2.partials) ++ Seq(
+      ("_pnn", count(x), sum(_: Column)), ("_pn", count(lit(1)), sum(_: Column)))
+    val aggs = parts.map { case (n, a, _) => a.as(n) }
+    val partials = p.b.groupBy(col(BKT).as("_b")).agg(aggs.head, aggs.tail: _*)
+    val j = joinPriors(p.b,
+      priorsOf(partials, parts.map { case (n, _, c) => c(col(n)) -> n }: _*))
     val nnPfx = coalesce(col("_pnn"), lit(0L)) + count(x).over(wc)
     val nPfx = coalesce(col("_pn"), lit(0L)) + count(lit(1)).over(wc)
-    val res =
-      if (naRm) when(nnPfx === 0, lit(null)).otherwise(value)
-      else when(nnPfx < nPfx, lit(null)).otherwise(value)
-    aliasFit(withOutDropped(j, out, res, Seq(BKT, TB, "_pm", "_pnn", "_pn")),
-      key, p)
-  }
-
-  /** FUSED global running max AND min along one key — the chained
-    * `cumMinMax ∘ cumMinMax` pair (q_cumminmax_global's max(naRm) then
-    * min(poison)) paid TWO full-data bucket exchanges, two partials
-    * aggregations and two broadcast joins over the same (df, key); the
-    * extremes are independent of each other, so one bucketing + ONE
-    * partials pass + one join computes both (the within-bucket windows
-    * share partitioning+ordering, so Catalyst plans one WindowExec).
-    * Semantics per output are EXACTLY [[cumMinMax]]'s — same partials
-    * algebra, same null-tolerant carry, same naRm/poison gates
-    * (optimization round 22; the shiftMulti precedent).
-    *
-    * `ops` = (out, isMin, naRm) per output column.
-    */
-  def cumMinMaxMulti(df: DataFrame, x: Column, key: Column,
-                     ops: Seq[(String, Boolean, Boolean)],
-                     asc: Boolean = true, buckets: Int = 0,
-                     nullsFirst: Option[Boolean] = None): DataFrame = {
-    require(ops.nonEmpty, "cumMinMaxMulti needs at least one op")
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val b = p.b
-    val wc = Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val needMin = ops.exists(_._2)
-    val needMax = ops.exists(!_._2)
-    val extremeAggs =
-      (if (needMin) Seq(min(x).as("_pmin")) else Nil) ++
-        (if (needMax) Seq(max(x).as("_pmax")) else Nil)
-    val partials = b.groupBy(col(BKT).as("_b"))
-      .agg(extremeAggs.head,
-        (extremeAggs.tail :+ count(x).as("_pnn") :+ count(lit(1)).as("_pn")): _*)
-    val priorAggs =
-      (if (needMin) Seq((min(col("_pmin")): Column) -> "_pmin") else Nil) ++
-        (if (needMax) Seq((max(col("_pmax")): Column) -> "_pmax") else Nil) ++
-        Seq((sum(col("_pnn")): Column) -> "_pnn",
-          (sum(col("_pn")): Column) -> "_pn")
-    val priors = priorsOf(partials, priorAggs: _*)
-    val j = joinPriors(b, priors)
-    val nnPfx = coalesce(col("_pnn"), lit(0L)) + count(x).over(wc)
-    val nPfx = coalesce(col("_pn"), lit(0L)) + count(lit(1)).over(wc)
-    val outCols = ops.map { case (out, isMin, naRm) =>
-      val pm = if (isMin) col("_pmin") else col("_pmax")
-      val within = (if (isMin) min(x) else max(x)).over(wc)
-      val combine = if (isMin) least(pm, within) else greatest(pm, within)
-      val value = when(pm.isNull, within)
-        .when(within.isNull, pm).otherwise(combine)
-      val res =
-        if (naRm) when(nnPfx === 0, lit(null)).otherwise(value)
-        else when(nnPfx < nPfx, lit(null)).otherwise(value)
-      res.as(out)
+    val byFn = carries.toMap
+    val outs = ops.map { case (fn, naRm, out) =>
+      out -> when(if (naRm) nnPfx === 0 else nnPfx < nPfx, lit(null))
+        .otherwise(byFn(fn).value(wc))
     }
-    val dropSet = Set(BKT, TB, "_pmin", "_pmax", "_pnn", "_pn")
-    val keep = j.columns.filterNot(dropSet).filterNot(ops.map(_._1).toSet)
-    aliasFit(j.select(keep.toSeq.map(col) ++ outCols: _*), key, p)
-  }
-
-  // ---- cumulative product (global tier of Windows.cum("prod")) --------
-
-  /** Global running product along `key` — the log-space sign/zero/null
-    * tracked form of `Windows.cum("prod")`, with per-bucket partials
-    * (zero count, negative count, log-magnitude sum) combined across
-    * prior buckets.
-    *
-    * FP contract (like cumsum's reassociation note): the magnitude is
-    * exp(Σ log|x|), NOT a sequential multiply — for general magnitudes
-    * the two accumulate rounding differently (and saturate to
-    * Inf/underflow to 0 at different prefixes), so bit-parity with
-    * `cum("prod_exact")` holds only for exactly-representable factor
-    * sets (±1/0, powers of two). This is the same trade
-    * `Windows.cum("prod")` documents — log-space is what makes the
-    * running product O(n) and prefix-combinable; use `prod_exact` (and
-    * its sequential cost) where bitwise parity matters.
-    */
-  def cumprod(df: DataFrame, x0: Column, key: Column, out: String,
-              asc: Boolean = true, naRm: Boolean = false,
-              buckets: Int = 0,
-              nullsFirst: Option[Boolean] = None): DataFrame = {
-    val x = x0.cast("double")
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val b = p.b
-    val wc = Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val partials = b.groupBy(col(BKT).as("_b")).agg(
-      sum(when(x === 0.0, 1L).otherwise(0L)).as("_pz"),
-      sum(when(x < 0.0, 1L).otherwise(0L)).as("_pneg"),
-      sum(when(x =!= 0.0, log(abs(x)))).as("_plog"),
-      count(x).as("_pnn"), count(lit(1)).as("_pn"))
-    val priors = priorsOf(partials,
-      sum(col("_pz")) -> "_pz", sum(col("_pneg")) -> "_pneg",
-      sum(col("_plog")) -> "_plog", sum(col("_pnn")) -> "_pnn",
-      sum(col("_pn")) -> "_pn")
-    val j = joinPriors(b, priors)
-    val zeros = coalesce(col("_pz"), lit(0L)) +
-      sum(when(x === 0.0, 1L).otherwise(0L)).over(wc)
-    val negs = coalesce(col("_pneg"), lit(0L)) +
-      sum(when(x < 0.0, 1L).otherwise(0L)).over(wc)
-    val logMag = addNT(col("_plog"), sum(when(x =!= 0.0, log(abs(x)))).over(wc))
-    val nnPfx = coalesce(col("_pnn"), lit(0L)) + count(x).over(wc)
-    val nPfx = coalesce(col("_pn"), lit(0L)) + count(lit(1)).over(wc)
-    val body = when(zeros > 0, lit(0.0))
-      .otherwise(when(negs % 2 === 0, lit(1.0)).otherwise(lit(-1.0)) *
-        exp(coalesce(logMag, lit(0.0))))
-    val res =
-      if (naRm) when(nnPfx === 0, lit(null).cast("double")).otherwise(body)
-      else when(nnPfx < nPfx, lit(null).cast("double")).otherwise(body)
-    aliasFit(
-      withOutDropped(j, out, res,
-        Seq(BKT, TB, "_pz", "_pneg", "_plog", "_pnn", "_pn")),
-      key, p)
+    withOuts(j, outs, Seq(BKT, TB) ++ parts.map(_._1))
   }
 
   // ---- frank (global tier of Windows.frankNa) -------------------------
 
-  /** Global frank — ties min/dense/max/average/first with na.last
-    * handling, `Windows.frankNa` semantics for `by = Nil`. The FIRST
-    * value column doubles as the bucket key, so tie blocks stay whole
-    * and per-bucket ranks correct by prior-bucket row/distinct counts;
-    * `more` adds secondary ranked columns (frankv's cols/order vector,
-    * tests.Rraw 2386.*) as (bare column, descending) pairs — their tie
-    * blocks nest inside the first column's, so bucketing is untouched
-    * and only the within-bucket order, tie partitions, and distinct
-    * counts widen to the tuple. `appearance` (needed for ties="first")
-    * must be unique per row.
+  /** Global frank — ties min/dense/max/average/first/last with na.last
+    * handling, `Windows.frankNa` semantics for `by = Nil`. Every
+    * `(ties, out)` entry ranks the SAME value column over ONE bucketing,
+    * one partials aggregation and one broadcast join: the (_pn, _pd)
+    * offsets are identical across ties methods, and the within-bucket
+    * windows all share the bucket partitioning, so no extra exchange
+    * appears per method.
+    *
+    * The value column doubles as the bucket key, so tie blocks stay
+    * whole and per-bucket ranks correct by prior-bucket row/distinct
+    * counts; `more` adds secondary ranked columns (frankv's cols/order
+    * vector, tests.Rraw 2386.*) as (bare column, descending) pairs —
+    * their tie blocks nest inside the first column's, so bucketing is
+    * untouched and only the within-bucket order, tie partitions, and
+    * distinct counts widen to the tuple. `appearance` (needed for
+    * ties="first"/"last") must be unique per row.
     */
-  def frank(df: DataFrame, value: Column, desc: Boolean, ties: String,
-            naLast: String, out: String, appearance: Seq[Column] = Nil,
-            buckets: Int = 0,
-            more: Seq[(Column, Boolean)] = Nil): DataFrame = {
-    // multi-column na.last="keep": the reference NA-outs rows with ANY
-    // ranked column NA (R/frank.R is_na(x, cols)); rank the fully
-    // non-null subset and union the NA rows back — removed rows cannot
-    // offset any surviving rank
+  def frankMulti(df: DataFrame, value: Column, desc: Boolean,
+                 tiesOuts: Seq[(String, String)], naLast: String,
+                 appearance: Seq[Column] = Nil, buckets: Int = 0,
+                 more: Seq[(Column, Boolean)] = Nil): DataFrame = {
+    require(tiesOuts.nonEmpty, "frankMulti needs at least one (ties, out)")
     if (naLast == "keep" && more.nonEmpty) {
+      // multi-column na.last="keep": the reference NA-outs rows with ANY
+      // ranked column NA (R/frank.R is_na(x, cols)); rank the fully
+      // non-null subset and union the NA rows back — removed rows cannot
+      // offset any surviving rank
       val anyNull = (value +: more.map(_._1)).map(_.isNull).reduce(_ || _)
-      val rankType = if (ties == "average") "double" else "long"
-      val ranked = frank(df.filter(!anyNull), value, desc, ties, "true",
-        out, appearance, buckets, more)
+      val ranked = frankMulti(df.filter(!anyNull), value, desc, tiesOuts,
+        "true", appearance, buckets, more)
       return ranked.unionByName(
-        df.filter(anyNull).withColumn(out, lit(null).cast(rankType)))
+        tiesOuts.foldLeft(df.filter(anyNull)) { case (acc, (ties, out)) =>
+          acc.withColumn(out,
+            lit(null).cast(if (ties == "average") "double" else "long"))
+        })
     }
     val nullsFirst = naLast == "false"
     val asc = !desc
@@ -746,7 +694,7 @@ object GlobalOrdered {
     val ords = ordOf(value, asc, nullsFirst) +:
       more.map { case (c, d) => ordOf(c, !d, nullsFirst) }
     val tieVals = value +: more.map(_._1)
-    val w = Window.partitionBy(col(BKT)).orderBy(ords: _*)
+    val w = bucketWindow(ords)
     val partials = b.groupBy(col(BKT).as("_b")).agg(
       count(lit(1)).as("_pn"),
       // distinct RANKED TUPLES per bucket: the single-column form counts
@@ -760,100 +708,16 @@ object GlobalOrdered {
       sum(col("_pn")) -> "_pn", sum(col("_pd")) -> "_pd")
     val j = joinPriors(b, priors)
     val rowOff = coalesce(col("_pn"), lit(0L))
-    val ranked = ties match {
-      case "min"   => j.withColumn(out, rank().over(w) + rowOff)
-      case "dense" => j.withColumn(out,
-        dense_rank().over(w) + coalesce(col("_pd"), lit(0L)))
-      case "first" =>
-        require(appearance.nonEmpty,
-          "global frank(ties=\"first\") needs unique `appearance` columns")
-        j.withColumn(out,
-          row_number().over(Window.partitionBy(col(BKT))
-            .orderBy(ords ++ appearance: _*)) + rowOff)
-      case "last" =>
-        require(appearance.nonEmpty,
-          "global frank(ties=\"last\") needs unique `appearance` columns")
-        j.withColumn(out,
-          row_number().over(Window.partitionBy(col(BKT))
-            .orderBy(ords ++ appearance.map(Windows.flipOrder): _*)) + rowOff)
-      case "max" =>
-        val tiePart = Window.partitionBy(col(BKT) +: tieVals: _*)
-        j.withColumn(out,
-          rank().over(w) + count(lit(1)).over(tiePart) - 1 + rowOff)
-      case "average" =>
-        val tiePart = Window.partitionBy(col(BKT) +: tieVals: _*)
-        j.withColumn(out,
-          rank().over(w) + (count(lit(1)).over(tiePart) - 1) / 2.0 + rowOff)
-      case other => throw new IllegalArgumentException(
-        s"global frank ties.method=$other (first|last|min|max|dense|average)")
-    }
-    val cleaned = ranked.drop(BKT, TB, "_pn", "_pd")
-    aliasFit(
-      if (naLast == "keep")
-        cleaned.withColumn(out, when(value.isNull, lit(null)).otherwise(col(out)))
-      else cleaned,
-      value, p)
-  }
-
-  /** FUSED multi-ties global frank: every `(ties, out)` entry ranks the
-    * SAME value column (plus `more` secondaries) over ONE bucketing, one
-    * partials aggregation and one broadcast join — a chained
-    * `frank ∘ frank ∘ frank` (q_frank_global's min/dense/average) paid a
-    * full-data bucket exchange, a partials pass and a join PER ties
-    * method even though the (_pn, _pd) offsets are identical across
-    * them. Per-out semantics are EXACTLY [[frank]]'s (same rank
-    * expressions, same na.last handling); the within-bucket windows all
-    * share the bucket partitioning, so no extra exchange appears
-    * (optimization round 22; the shiftMulti precedent).
-    */
-  def frankMulti(df: DataFrame, value: Column, desc: Boolean,
-                 tiesOuts: Seq[(String, String)], naLast: String,
-                 appearance: Seq[Column] = Nil, buckets: Int = 0,
-                 more: Seq[(Column, Boolean)] = Nil): DataFrame = {
-    require(tiesOuts.nonEmpty, "frankMulti needs at least one (ties, out)")
-    if (naLast == "keep" && more.nonEmpty) {
-      // reference multi-column na.last="keep": NA-out rows with ANY
-      // ranked column NA — same union-back shape as [[frank]]'s
-      val anyNull = (value +: more.map(_._1)).map(_.isNull).reduce(_ || _)
-      val ranked = frankMulti(df.filter(!anyNull), value, desc, tiesOuts,
-        "true", appearance, buckets, more)
-      return ranked.unionByName(
-        tiesOuts.foldLeft(df.filter(anyNull)) { case (acc, (ties, out)) =>
-          acc.withColumn(out,
-            lit(null).cast(if (ties == "average") "double" else "long"))
-        })
-    }
-    val nullsFirst = naLast == "false"
-    val asc = !desc
-    val p = prep(df, value, asc, buckets, Some(nullsFirst))
-    val b = p.b
-    val ords = ordOf(value, asc, nullsFirst) +:
-      more.map { case (c, d) => ordOf(c, !d, nullsFirst) }
-    val tieVals = value +: more.map(_._1)
-    val w = Window.partitionBy(col(BKT)).orderBy(ords: _*)
-    val partials = b.groupBy(col(BKT).as("_b")).agg(
-      count(lit(1)).as("_pn"),
-      (if (more.isEmpty)
-         countDistinct(value) + max(when(value.isNull, 1).otherwise(0))
-       else countDistinct(struct(tieVals: _*))).as("_pd"))
-    val priors = priorsOf(partials,
-      sum(col("_pn")) -> "_pn", sum(col("_pd")) -> "_pd")
-    val j = joinPriors(b, priors)
-    val rowOff = coalesce(col("_pn"), lit(0L))
     val tiePart = Window.partitionBy(col(BKT) +: tieVals: _*)
     def rankCol(ties: String): Column = ties match {
       case "min"   => rank().over(w) + rowOff
       case "dense" => dense_rank().over(w) + coalesce(col("_pd"), lit(0L))
-      case "first" =>
+      case "first" | "last" =>
         require(appearance.nonEmpty,
-          "global frank(ties=\"first\") needs unique `appearance` columns")
-        row_number().over(Window.partitionBy(col(BKT))
-          .orderBy(ords ++ appearance: _*)) + rowOff
-      case "last" =>
-        require(appearance.nonEmpty,
-          "global frank(ties=\"last\") needs unique `appearance` columns")
-        row_number().over(Window.partitionBy(col(BKT))
-          .orderBy(ords ++ appearance.map(Windows.flipOrder): _*)) + rowOff
+          s"global frank(ties=\"$ties\") needs unique `appearance` columns")
+        val app = if (ties == "first") appearance
+                  else appearance.map(Windows.flipOrder)
+        row_number().over(bucketWindow(ords ++ app)) + rowOff
       case "max" =>
         rank().over(w) + count(lit(1)).over(tiePart) - 1 + rowOff
       case "average" =>
@@ -861,15 +725,20 @@ object GlobalOrdered {
       case other => throw new IllegalArgumentException(
         s"global frank ties.method=$other (first|last|min|max|dense|average)")
     }
-    val outCols = tiesOuts.map { case (ties, out) =>
+    val outs = tiesOuts.map { case (ties, out) =>
       val r = rankCol(ties)
-      (if (naLast == "keep") when(value.isNull, lit(null)).otherwise(r)
-       else r).as(out)
+      out -> (if (naLast == "keep") when(value.isNull, lit(null)).otherwise(r)
+              else r)
     }
-    val dropSet = Set(BKT, TB, "_pn", "_pd")
-    val keep = j.columns.filterNot(dropSet).filterNot(tiesOuts.map(_._2).toSet)
-    aliasFit(j.select(keep.toSeq.map(col) ++ outCols: _*), value, p)
+    aliasFit(withOuts(j, outs, Seq(BKT, TB, "_pn", "_pd")), value, p)
   }
+
+  def frank(df: DataFrame, value: Column, desc: Boolean, ties: String,
+            naLast: String, out: String, appearance: Seq[Column] = Nil,
+            buckets: Int = 0,
+            more: Seq[(Column, Boolean)] = Nil): DataFrame =
+    frankMulti(df, value, desc, Seq((ties, out)), naLast, appearance,
+      buckets, more)
 
   // ---- rleid (global tier of Windows.rleid) ---------------------------
 
@@ -938,116 +807,63 @@ object GlobalOrdered {
 
   // ---- nafill locf/nocb (global tier) ---------------------------------
 
-  /** Global last-non-null carried forward along `key`: within-bucket
-    * LOCF, with the carry-in from the nearest prior bucket that saw a
-    * non-null — per-bucket partial is max(struct(key, x)) over non-null
-    * x (struct max orders by key; null structs are skipped), so the
-    * carry needs no window at all.
+  /** Global last-non-null carried forward (`locfOut`) and/or next
+    * non-null carried backward (`nocbOut`) along `key`, walking the key
+    * ascending; only the side or sides asked for are built. Within a
+    * bucket LOCF/NOCB run as windows; the carry-in comes from the nearest
+    * prior (LOCF) or following (NOCB) bucket that saw a non-null — the
+    * per-bucket partial is max (resp. min) of struct(key, x) over
+    * non-null x (struct order is key order; null structs are skipped), so
+    * the carry is one window over the tiny partials frame. Both sides
+    * read the RAW x, so asking for both costs one bucketing, one
+    * partials aggregation and one broadcast join; the within-bucket
+    * windows share partitioning+ordering (frames differ per window
+    * FUNCTION, which one WindowExec handles).
     */
-  def nafillLocf(df: DataFrame, xIn: Column, key: Column, out: String,
-                 buckets: Int = 0, nanIsNa: Boolean = true,
-                 nullsFirst: Option[Boolean] = None): DataFrame = {
+  def nafill(df: DataFrame, xIn: Column, key: Column,
+             locfOut: Option[String], nocbOut: Option[String],
+             buckets: Int = 0, nanIsNa: Boolean = true,
+             nullsFirst: Option[Boolean] = None): DataFrame = {
+    require(locfOut.nonEmpty || nocbOut.nonEmpty,
+      "nafill needs a locf or a nocb output")
     val x = if (nanIsNa) graft.functions.Funcs.nanAsNa(xIn) else xIn
     val p = prep(df, key, asc = true, buckets, nullsFirst)
-    val b = p.b
-    val within = last(x, ignoreNulls = true)
-      .over(Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-        .rowsBetween(Window.unboundedPreceding, 0))
+    val w = bucketWindow(p.ords)
     // the carry struct's leading rank pins null-KEY rows to the side the
-    // sort places them (a bare struct(key, x) max would sort a null key
+    // sort places them (a bare struct(key, x) would sort a null key
     // smallest even when the order puts the null block last)
     val nr = when(key.isNull,
       lit(if (nullsFirst.getOrElse(true)) -1 else 1)).otherwise(lit(0))
-    val partials = b.groupBy(col(BKT).as("_b"))
-      .agg(max(when(x.isNotNull,
-        struct(nr.as("nr"), key.as("k"), x.as("v")))).as("_lastnn"))
-    val priors = priorsOf(partials, max(col("_lastnn")) -> "_carry")
-    aliasFit(
-      joinPriors(b, priors)
-        .withColumn(out, coalesce(within, col("_carry").getField("v")))
-        .drop(BKT, TB, "_carry"),
-      key, p)
+    val carry = when(x.isNotNull, struct(nr.as("nr"), key.as("k"), x.as("v")))
+    // (out, carry column, extreme, carry frame over the partials,
+    // within-bucket fill)
+    val sides = locfOut.map(o => (o, "_carryL", (c: Column) => max(c),
+        priorBuckets,
+        last(x, ignoreNulls = true)
+          .over(w.rowsBetween(Window.unboundedPreceding, 0)))).toSeq ++
+      nocbOut.map(o => (o, "_carryN", (c: Column) => min(c),
+        partialsWindow.rowsBetween(1, Window.unboundedFollowing),
+        first(x, ignoreNulls = true)
+          .over(w.rowsBetween(0, Window.unboundedFollowing))))
+    val aggs = sides.map { case (_, n, agg, _, _) => agg(carry).as(n) }
+    val partials = p.b.groupBy(col(BKT).as("_b")).agg(aggs.head, aggs.tail: _*)
+    val carries = partials.select(col("_b") +: sides.map {
+      case (_, n, agg, frame, _) => agg(col(n)).over(frame).as(n) }: _*)
+    val outs = sides.map { case (o, n, _, _, within) =>
+      o -> coalesce(within, col(n).getField("v")) }
+    aliasFit(withOuts(joinPriors(p.b, carries), outs,
+      Seq(BKT, TB) ++ sides.map(_._2)), key, p)
   }
 
-  /** Global next-non-null carried backward — mirror of [[nafillLocf]]
-    * (min struct over FOLLOWING buckets).
-    */
+  def nafillLocf(df: DataFrame, xIn: Column, key: Column, out: String,
+                 buckets: Int = 0, nanIsNa: Boolean = true,
+                 nullsFirst: Option[Boolean] = None): DataFrame =
+    nafill(df, xIn, key, Some(out), None, buckets, nanIsNa, nullsFirst)
+
   def nafillNocb(df: DataFrame, xIn: Column, key: Column, out: String,
                  buckets: Int = 0, nanIsNa: Boolean = true,
-                 nullsFirst: Option[Boolean] = None): DataFrame = {
-    val x = if (nanIsNa) graft.functions.Funcs.nanAsNa(xIn) else xIn
-    val p = prep(df, key, asc = true, buckets, nullsFirst)
-    val b = p.b
-    val within = first(x, ignoreNulls = true)
-      .over(Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-        .rowsBetween(0, Window.unboundedFollowing))
-    val nr = when(key.isNull,
-      lit(if (nullsFirst.getOrElse(true)) -1 else 1)).otherwise(lit(0))
-    val partials = b.groupBy(col(BKT).as("_b"))
-      .agg(min(when(x.isNotNull,
-        struct(nr.as("nr"), key.as("k"), x.as("v")))).as("_firstnn"))
-    // suffix carry over STRICTLY-FOLLOWING buckets via the tiny partials
-    // window (mirror of priorsOf's prefix frame; last bucket → null)
-    val followers = partials.select(col("_b"),
-      min(col("_firstnn"))
-        .over(partialsWindow.rowsBetween(1, Window.unboundedFollowing))
-        .as("_carry"))
-    aliasFit(
-      joinPriors(b, followers)
-        .withColumn(out, coalesce(within, col("_carry").getField("v")))
-        .drop(BKT, TB, "_carry"),
-      key, p)
-  }
-
-  /** FUSED global LOCF + NOCB along one key — the chained
-    * `nafillNocb(nafillLocf(df))` pair (q_nafill_global) paid two
-    * full-data bucket exchanges, two partials aggregations and two
-    * broadcast joins over the same (df, key); the forward and backward
-    * carries are independent (both read the RAW x), so one bucketing +
-    * one partials pass + one join computes both. The two within-bucket
-    * windows share partitioning+ordering (frames differ per window
-    * FUNCTION, which one WindowExec handles). Semantics per output are
-    * EXACTLY [[nafillLocf]]'s / [[nafillNocb]]'s — same carry structs,
-    * same null-key rank pinning (optimization round 22).
-    */
-  def nafillLocfNocb(df: DataFrame, xIn: Column, key: Column,
-                     outLocf: String, outNocb: String,
-                     buckets: Int = 0, nanIsNa: Boolean = true,
-                     nullsFirst: Option[Boolean] = None): DataFrame = {
-    val x = if (nanIsNa) graft.functions.Funcs.nanAsNa(xIn) else xIn
-    val p = prep(df, key, asc = true, buckets, nullsFirst)
-    val b = p.b
-    val withinL = last(x, ignoreNulls = true)
-      .over(Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-        .rowsBetween(Window.unboundedPreceding, 0))
-    val withinN = first(x, ignoreNulls = true)
-      .over(Window.partitionBy(col(BKT)).orderBy(p.ords: _*)
-        .rowsBetween(0, Window.unboundedFollowing))
-    val nr = when(key.isNull,
-      lit(if (nullsFirst.getOrElse(true)) -1 else 1)).otherwise(lit(0))
-    val partials = b.groupBy(col(BKT).as("_b"))
-      .agg(max(when(x.isNotNull,
-        struct(nr.as("nr"), key.as("k"), x.as("v")))).as("_lastnn"),
-        min(when(x.isNotNull,
-          struct(nr.as("nr"), key.as("k"), x.as("v")))).as("_firstnn"))
-    // prefix carry for LOCF (strictly-prior buckets), suffix carry for
-    // NOCB (strictly-following) — both read off the tiny partials frame
-    val carries = partials.select(col("_b"),
-      max(col("_lastnn"))
-        .over(partialsWindow.rowsBetween(Window.unboundedPreceding, -1))
-        .as("_carryL"),
-      min(col("_firstnn"))
-        .over(partialsWindow.rowsBetween(1, Window.unboundedFollowing))
-        .as("_carryN"))
-    val j = joinPriors(b, carries)
-    val keep = j.columns.filterNot(Set(BKT, TB, "_carryL", "_carryN"))
-      .filterNot(Set(outLocf, outNocb))
-    aliasFit(
-      j.select(keep.toSeq.map(col) :+
-        coalesce(withinL, col("_carryL").getField("v")).as(outLocf) :+
-        coalesce(withinN, col("_carryN").getField("v")).as(outNocb): _*),
-      key, p)
-  }
+                 nullsFirst: Option[Boolean] = None): DataFrame =
+    nafill(df, xIn, key, None, Some(out), buckets, nanIsNa, nullsFirst)
 
   // ---- phantom boundary machinery (shift / froll) ---------------------
 
@@ -1083,9 +899,6 @@ object GlobalOrdered {
         (col("_cum") - col("_c")).as("_dexcl"))), col("_d") > col("_s"))
       .select(col("_s"), col("_d"),
         (col("_dexcl") - col("_scum")).as("_between"))
-    val w = Window.partitionBy(col(BKT)).orderBy(ords: _*)
-    val wDesc = Window.partitionBy(col(BKT))
-      .orderBy(ords.map(Windows.flipOrder): _*)
     def side(nEdge: Int, toLater: Boolean): Option[DataFrame] =
       if (nEdge <= 0) None
       else {
@@ -1099,8 +912,8 @@ object GlobalOrdered {
             (if (toLater) col("_d") else col("_s")).as("_dest"),
             (lit(nEdge.toLong) - col("_between")).as("_need"))
         val joined = b
-          .withColumn("_brn",
-            row_number().over(if (toLater) wDesc else w).cast("long"))
+          .withColumn("_brn", row_number().over(bucketWindow(
+            if (toLater) ords.map(Windows.flipOrder) else ords)).cast("long"))
           .join(broadcast(need),
             col(BKT) === col("_src") && col("_brn") <= col("_need"))
         val outCols = b.columns.toSeq.map {
@@ -1113,47 +926,53 @@ object GlobalOrdered {
       .flatten.foldLeft(real)((acc, ph) => acc.unionByName(ph))
   }
 
-  /** Global shift along `key` — `Windows.shift(c, n, by = Nil, ...)`
-    * semantics via phantom boundary rows. The order key must be unique
-    * per row; any bucket-size distribution is exact (see
-    * [[phantomAugmented]]).
+  /** The phantom-op skeleton: bucket (tie-agnostic), copy in the edge
+    * rows a `frame` = (lo, hi) row window reaches across bucket edges,
+    * evaluate `f` over the augmented frame and its within-bucket order,
+    * then drop the phantoms and the helper columns.
     */
-  def shift(df: DataFrame, c: Column, n: Int, key: Column, out: String,
-            fill: Column = lit(null), asc: Boolean = true,
-            buckets: Int = 0,
-            nullsFirst: Option[Boolean] = None): DataFrame = {
+  private def phantomOp(df: DataFrame, key: Column, asc: Boolean,
+                        buckets: Int, nullsFirst: Option[Boolean],
+                        frame: (Int, Int))
+                       (f: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
     val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val aug = phantomAugmented(p.b, p.ords,
-      nBefore = math.max(n, 0), nAfter = math.max(-n, 0))
-    aliasFit(aug
-      .withColumn(out, Windows.shift(c, n, Seq(BKT), p.ords, fill))
-      .filter(!col(PH)).drop(BKT, TB, PH), key, p)
+    dropPhantoms(f(phantomAugmented(p.b, p.ords, -frame._1, frame._2), p.ords),
+      key, p)
   }
 
-  /** Global MULTI-shift along `key`: every `(out, c, n, fill)` entry
-    * evaluates over ONE bucketing and ONE phantom union sized to the
-    * extreme reaches — `shift(x, n = 1:k)`'s by=Nil fold previously
-    * built a phantom union and a full-data exchange PER width; k
-    * shifts now cost the same single exchange as one shift (the per-n
-    * windows share the bucket partitioning, so Catalyst collapses them
-    * into one WindowExec). Phantoms sized to the max lag/lead reach
-    * serve every smaller width (reference src/shift.c evaluates the
-    * whole n vector in one pass for the same reason).
+  private def dropPhantoms(aug: DataFrame, key: Column, p: Prepped): DataFrame =
+    aliasFit(aug.filter(!col(PH)).drop(BKT, TB, PH), key, p)
+
+  /** Global MULTI-shift along `key` — `Windows.shift(c, n, by = Nil, ...)`
+    * semantics per `(out, c, n, fill)` entry via phantom boundary rows.
+    * Every entry evaluates over ONE bucketing and ONE phantom union sized
+    * to the extreme reaches, so k shifts cost the same single exchange as
+    * one (the per-n windows share the bucket partitioning, so Catalyst
+    * collapses them into one WindowExec; reference src/shift.c evaluates
+    * the whole n vector in one pass for the same reason). The order key
+    * must be unique per row; any bucket-size distribution is exact (see
+    * [[phantomAugmented]]).
     */
   def shiftMulti(df: DataFrame,
                  shifts: Seq[(String, Column, Int, Column)],
                  key: Column, asc: Boolean = true, buckets: Int = 0,
                  nullsFirst: Option[Boolean] = None): DataFrame = {
     require(shifts.nonEmpty, "shiftMulti needs at least one shift")
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val nBefore = shifts.map(_._3).filter(_ > 0).foldLeft(0)(math.max)
-    val nAfter = shifts.map(-_._3).filter(_ > 0).foldLeft(0)(math.max)
-    val aug = phantomAugmented(p.b, p.ords, nBefore, nAfter)
-    val withCols = shifts.foldLeft(aug) { case (acc, (out, c, n, fill)) =>
-      acc.withColumn(out, Windows.shift(c, n, Seq(BKT), p.ords, fill))
+    val ns = shifts.map(_._3)
+    // lag n > 0 reads n rows before, lead (n < 0) −n rows after
+    phantomOp(df, key, asc, buckets, nullsFirst,
+      (math.min(0, -ns.max), math.max(0, -ns.min))) { (aug, ords) =>
+      shifts.foldLeft(aug) { case (acc, (out, c, n, fill)) =>
+        acc.withColumn(out, Windows.shift(c, n, Seq(BKT), ords, fill))
+      }
     }
-    aliasFit(withCols.filter(!col(PH)).drop(BKT, TB, PH), key, p)
   }
+
+  def shift(df: DataFrame, c: Column, n: Int, key: Column, out: String,
+            fill: Column = lit(null), asc: Boolean = true,
+            buckets: Int = 0,
+            nullsFirst: Option[Boolean] = None): DataFrame =
+    shiftMulti(df, Seq((out, c, n, fill)), key, asc, buckets, nullsFirst)
 
   /** Global fixed-window rolling aggregate — `Windows.froll` semantics
     * for `by = Nil` via phantom boundary rows sized to the frame
@@ -1164,20 +983,11 @@ object GlobalOrdered {
             key: Column, align: String = "right", partial: Boolean = false,
             asc: Boolean = true, buckets: Int = 0,
             naRm: Boolean = false,
-            nullsFirst: Option[Boolean] = None): DataFrame = {
-    val (nBefore, nAfter) = align match {
-      case "right"  => (n - 1, 0)
-      case "left"   => (0, n - 1)
-      case "center" => val before = (n - 1) / 2; (before, n - 1 - before)
-      case other    => throw new IllegalArgumentException(s"align=$other")
+            nullsFirst: Option[Boolean] = None): DataFrame =
+    phantomOp(df, key, asc, buckets, nullsFirst, Windows.bounds(n, align)) {
+      (aug, ords) => aug.withColumn(out,
+        Windows.froll(fn, c, n, Seq(BKT), ords, align, partial, naRm = naRm))
     }
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val aug = phantomAugmented(p.b, p.ords, nBefore, nAfter)
-    aliasFit(aug
-      .withColumn(out, Windows.froll(fn, c, n, Seq(BKT), p.ords,
-        align, partial, naRm = naRm))
-      .filter(!col(PH)).drop(BKT, TB, PH), key, p)
-  }
 
   /** Global frollapply — [[Windows.frollApplyF]] semantics for
     * `by = Nil` via phantom boundary rows: the closure runs per row
@@ -1193,20 +1003,11 @@ object GlobalOrdered {
                  align: String = "right", partial: Boolean = false,
                  asc: Boolean = true, buckets: Int = 0,
                  nullsFirst: Option[Boolean] = None,
-                 fill: Column = lit(null)): DataFrame = {
-    val (nBefore, nAfter) = align match {
-      case "right"  => (n - 1, 0)
-      case "left"   => (0, n - 1)
-      case "center" => val b = (n - 1) / 2; (b, n - 1 - b)
-      case other    => throw new IllegalArgumentException(s"align=$other")
+                 fill: Column = lit(null)): DataFrame =
+    phantomOp(df, key, asc, buckets, nullsFirst, Windows.bounds(n, align)) {
+      (aug, ords) => Windows.frollApplyF(aug, out, cols, n, Seq(BKT), ords, f,
+        returnType, align, partial, fill = fill)
     }
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val aug = phantomAugmented(p.b, p.ords, nBefore, nAfter)
-    aliasFit(
-      Windows.frollApplyF(aug, out, cols, n, Seq(BKT), p.ords, f, returnType,
-        align, partial, fill = fill)
-        .filter(!col(PH)).drop(BKT, TB, PH), key, p)
-  }
 
   /** Global ADAPTIVE rolling aggregate — `Windows.frollAdaptive`
     * semantics for `by = Nil`: phantom reach sized to the LARGEST
@@ -1222,18 +1023,11 @@ object GlobalOrdered {
                     buckets: Int = 0,
                     nullsFirst: Option[Boolean] = None): DataFrame = {
     require(maxN >= 1, s"frollAdaptive: maxN must be >= 1, got $maxN")
-    val (nBefore, nAfter) = align match {
-      case "right" => (maxN - 1, 0)
-      case "left"  => (0, maxN - 1)
-      case other   => throw new IllegalArgumentException(
-        s"adaptive align must be right/left, got '$other'")
+    phantomOp(df, key, asc, buckets, nullsFirst,
+      Windows.adaptiveBounds(maxN, align)) { (aug, ords) =>
+      aug.withColumn(out, Windows.frollAdaptive(fn, c, an, maxN, Seq(BKT),
+        ords, naRm = naRm, align = align, partial = partial))
     }
-    val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    val aug = phantomAugmented(p.b, p.ords, nBefore, nAfter)
-    aliasFit(aug
-      .withColumn(out, Windows.frollAdaptive(fn, c, an, maxN, Seq(BKT),
-        p.ords, naRm = naRm, align = align, partial = partial))
-      .filter(!col(PH)).drop(BKT, TB, PH), key, p)
   }
 
   /** Global calendar-window count — [[Windows.frolladapt]] for
@@ -1295,11 +1089,9 @@ object GlobalOrdered {
     val phantoms = b.filter(col(BKT) < destMax)
       .withColumn(BKT, explode(sequence(col(BKT) + 1, destMax)))
       .withColumn(PH, lit(true))
-    aliasFit(real.unionByName(phantoms)
-      .withColumn(out,
-        count(lit(1)).over(Window.partitionBy(col(BKT)).orderBy(time.asc)
-          .rangeBetween(-(n - 1), 0)).cast("int"))
-      .filter(!col(PH)).drop(BKT, TB, PH), time, p)
+    dropPhantoms(real.unionByName(phantoms)
+      .withColumn(out, count(lit(1)).over(bucketWindow(Seq(time.asc))
+        .rangeBetween(-(n - 1), 0)).cast("int")), time, p)
   }
 
   // ---- any-type global row number (used by Windows.grp) ---------------

@@ -212,10 +212,16 @@ object IndexCommit {
       } catch { case _: java.nio.file.FileAlreadyExistsException => false }
     // Only the lock winner's tmp can ever land at dst (healers rename
     // exactly the tmp the lock names), so for the winner "dst exists"
-    // IS success — a concurrent healer may have completed our rename
-    // before we did, making our own rename return false on the gone
-    // source.
-    if (iWon) fs.rename(tmp, dst) || fs.exists(dst)
+    // IS success: a loser that saw the lock may already have completed
+    // our rename. The source is then gone, and the local filesystem does
+    // not always answer false for that: its rename checks dst first, and
+    // if a healer renames between that check and ours, the rename falls
+    // back to copying the missing source and throws
+    // FileNotFoundException. That case reads as false, and dst decides.
+    if (iWon)
+      (try fs.rename(tmp, dst)
+       catch { case _: java.io.FileNotFoundException => false }) ||
+        fs.exists(dst)
     else {
       if (!fs.exists(dst)) {
         // heal a crashed winner: the lock names its tmp; complete the

@@ -123,20 +123,9 @@ object Windows {
     if (by.nonEmpty || allowGlobal)
       df.withColumn(out, cum(fn, c, by, order, allowGlobal, naRm))
     else globalKey(order) match {
-      case Some((key, asc, nf)) => fn match {
-        case "sum"  => GlobalOrdered.cumsum(df, c, key, out, asc, naRm,
+      case Some((key, asc, nf)) =>
+        GlobalOrdered.cum(df, c, key, Seq((fn, naRm, out)), asc,
           nullsFirst = Some(nf))
-        case "prod" => GlobalOrdered.cumprod(df, c, key, out, asc, naRm,
-          nullsFirst = Some(nf))
-        case "min"  => GlobalOrdered.cumMinMax(df, c, key, out, isMin = true,
-          asc, naRm, nullsFirst = Some(nf))
-        case "max"  => GlobalOrdered.cumMinMax(df, c, key, out, isMin = false,
-          asc, naRm, nullsFirst = Some(nf))
-        case other  => throw new IllegalArgumentException(
-          s"cum($other) has no global tier (exact sequential FP is " +
-            "inherently single-stream); pass allowGlobal=true for " +
-            "provably-small frames")
-      }
       case None => globalRouteError("cumDF")
     }
 
@@ -161,12 +150,9 @@ object Windows {
         // above); the reverse of the requested order also flips the
         // null block's side: desc_nulls_first == asc_nulls_last
         val effNf = Some(if (asc) nf else !nf)
-        if (eff == "locf")
-          GlobalOrdered.nafillLocf(df, c, key, out, nanIsNa = nanIsNa,
-            nullsFirst = effNf)
-        else
-          GlobalOrdered.nafillNocb(df, c, key, out, nanIsNa = nanIsNa,
-            nullsFirst = effNf)
+        GlobalOrdered.nafill(df, c, key, Option.when(eff == "locf")(out),
+          Option.when(eff == "nocb")(out), nanIsNa = nanIsNa,
+          nullsFirst = effNf)
       case None => globalRouteError("nafillDF")
     }
   }
@@ -546,12 +532,24 @@ object Windows {
   // ---- froll* (src/froll.c) -------------------------------------------
 
   /** Frame bounds for align=right|center|left over an n-row window. */
-  private def bounds(n: Int, align: String): (Int, Int) = align match {
+  private[operators] def bounds(n: Int, align: String): (Int, Int) = align match {
     case "right"  => (-(n - 1), 0)
     case "left"   => (0, n - 1)
     case "center" => val before = (n - 1) / 2; (-before, n - 1 - before)
     case other    => throw new IllegalArgumentException(s"align=$other")
   }
+
+  /** Frame bounds of an adaptive window of at most maxN rows.
+    * align="left" (NEWS #5438: adaptive left alignment) looks FORWARD
+    * over rows i..i+an-1; "center" does not exist for adaptive in the
+    * reference either (R/froll.R).
+    */
+  private[operators] def adaptiveBounds(maxN: Int, align: String): (Int, Int) =
+    align match {
+      case "right" | "left" => bounds(maxN, align)
+      case other => throw new IllegalArgumentException(
+        s"adaptive align must be right/left, got '$other'")
+    }
 
   /** Rolling aggregate over a fixed n-row window. `partial=false`
     * (reference default) yields null until the window is full —
@@ -866,15 +864,7 @@ object Windows {
                             allowGlobal: Boolean, op: String,
                             align: String = "right")
       : (Column, Column, Column) = {
-    // align="left" (NEWS #5438: adaptive left alignment): row i's
-    // window looks FORWARD over rows i..i+an-1; "center" does not
-    // exist for adaptive in the reference either (R/froll.R)
-    val (lo, hi) = align match {
-      case "right" => (-(maxN - 1).toLong, 0L)
-      case "left"  => (0L, (maxN - 1).toLong)
-      case other => throw new IllegalArgumentException(
-        s"adaptive align must be right/left, got '$other'")
-    }
+    val (lo, hi) = adaptiveBounds(maxN, align)
     val w = spec(by, order, allowGlobal, op).rowsBetween(lo, hi)
     val frame = collect_list(struct(c.as("v"))).over(w)
     val take = least(an, size(frame))

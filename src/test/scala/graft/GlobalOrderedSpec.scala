@@ -66,6 +66,14 @@ class GlobalOrderedSpec extends AnyFunSuite {
         Windows.cum("prod", col("x"), Nil, Seq(col("k").asc),
           allowGlobal = true, naRm = naRm))
       assert(collectMap(tiered, "k", "cp") == collectMap(naive, "k", "cp"))
+      // sum and prod in one cum (the ±1/0 sums are exact too)
+      val both = GlobalOrdered.cum(df, col("x"), col("k"),
+        Seq(("sum", naRm, "cs"), ("prod", naRm, "cp")), buckets = 8)
+      val naiveSum = df.withColumn("cs",
+        Windows.cum("sum", col("x"), Nil, Seq(col("k").asc),
+          allowGlobal = true, naRm = naRm))
+      assert(collectMap(both, "k", "cs") == collectMap(naiveSum, "k", "cs"))
+      assert(collectMap(both, "k", "cp") == collectMap(naive, "k", "cp"))
     }
   }
 
@@ -83,6 +91,16 @@ class GlobalOrderedSpec extends AnyFunSuite {
         .map { case (k, v) => k -> v.map(x => x.toString.toDouble) }
       assert(got == want, s"ties=$ties")
     }
+    // min/dense/average/max in one frankMulti
+    val multi = GlobalOrdered.frankMulti(df, col("v"), desc = false,
+      Seq("min", "dense", "average", "max").map(t => (t, s"rk_$t")), "true",
+      buckets = 8)
+    for (ties <- Seq("min", "dense", "average", "max"))
+      assert(collectMap(multi, "k", s"rk_$ties")
+        .map { case (k, v) => k -> v.map(x => x.toString.toDouble) } ==
+        collectMap(naiveRank(ties), "k", "rk")
+          .map { case (k, v) => k -> v.map(x => x.toString.toDouble) },
+        s"frankMulti ties=$ties")
   }
 
   test("frank naLast=keep nulls out; naLast=false ranks nulls first") {
@@ -121,6 +139,16 @@ class GlobalOrderedSpec extends AnyFunSuite {
       assert(collectMap(tiered, "k", "sh") == collectMap(naive, "k", "sh"),
         s"n=$n")
     }
+    // lag 1, lag 2 and lead 1 in one shiftMulti
+    val ns = Seq(1 -> "lag1", 2 -> "lag2", -1 -> "lead1")
+    val multi = GlobalOrdered.shiftMulti(df,
+      ns.map { case (n, out) => (out, col("v"), n, lit(-1.0)) }, col("k"),
+      buckets = 8)
+    for ((n, out) <- ns) {
+      val naive = df.withColumn(out, Windows.shift(col("v"), n, Nil,
+        Seq(col("k").asc), lit(-1.0), allowGlobal = true))
+      assert(collectMap(multi, "k", out) == collectMap(naive, "k", out), out)
+    }
   }
 
   test("froll sum/mean match naive global rolling, partial both ways, all aligns") {
@@ -148,6 +176,13 @@ class GlobalOrderedSpec extends AnyFunSuite {
     val naiveNocb = df.withColumn("f",
       Windows.nafillNocb(col("v2"), Nil, Seq(col("k").asc), allowGlobal = true))
     assert(collectMap(nocb, "k", "f") == collectMap(naiveNocb, "k", "f"))
+    // each side alone adds only its own column; both sides in one nafill
+    assert(locf.columns.toSeq == df.columns.toSeq :+ "f")
+    assert(nocb.columns.toSeq == df.columns.toSeq :+ "f")
+    val both = GlobalOrdered.nafill(df, col("v2"), col("k"), Some("l"),
+      Some("n"), buckets = 8)
+    assert(collectMap(both, "k", "l") == collectMap(naiveLocf, "k", "f"))
+    assert(collectMap(both, "k", "n") == collectMap(naiveNocb, "k", "f"))
   }
 
   test("degenerate keys (massive ties) collapse buckets but stay correct") {
@@ -243,6 +278,16 @@ class GlobalOrderedSpec extends AnyFunSuite {
       assert(collectMap(tiered, "k", "cm") == collectMap(naive, "k", "cm"),
         s"fn=$fn naRm=$naRm")
     }
+    // max with naRm and min with poison in one cum
+    val both = GlobalOrdered.cum(df, col("v"), col("k"),
+      Seq(("max", true, "cmax"), ("min", false, "cmin")), buckets = 8)
+    val naive = df
+      .withColumn("cmax", Windows.cum("max", col("v"), Nil, Seq(col("k").asc),
+        allowGlobal = true, naRm = true))
+      .withColumn("cmin", Windows.cum("min", col("v"), Nil, Seq(col("k").asc),
+        allowGlobal = true))
+    for (out <- Seq("cmax", "cmin"))
+      assert(collectMap(both, "k", out) == collectMap(naive, "k", out), out)
   }
 
   test("string order key: sampled bounds feed the same machinery (froll/shift/cumsum)") {
@@ -533,5 +578,22 @@ class GlobalOrderedSpec extends AnyFunSuite {
     assert(at4096(1).values.flatten.toSet.size == n / 5 + 1)
     // row numbers are the exact permutation (unique ascending key)
     assert(at4096(3) == (1 to n).map(i => i.toLong -> Some(i.toLong)).toMap)
+  }
+
+  test("an existing out column keeps its position in every multi-op form") {
+    val df = fixture.withColumn("t", lit(1)) // k, v, s, t: write over s
+    val cols = df.columns.toSeq
+    val forms = Seq(
+      "cum" -> GlobalOrdered.cum(df, col("v"), col("k"),
+        Seq(("max", true, "s"), ("min", false, "m")), buckets = 8),
+      "frankMulti" -> GlobalOrdered.frankMulti(df, col("v"), desc = false,
+        Seq(("min", "s"), ("dense", "m")), "true", buckets = 8),
+      "nafill" -> GlobalOrdered.nafill(df, col("v"), col("k"), Some("s"),
+        Some("m"), buckets = 8),
+      "shiftMulti" -> GlobalOrdered.shiftMulti(df,
+        Seq(("s", col("v"), 1, lit(null)), ("m", col("v"), -1, lit(null))),
+        col("k"), buckets = 8))
+    for ((name, out) <- forms)
+      assert(out.columns.toSeq == cols :+ "m", name)
   }
 }

@@ -214,6 +214,39 @@ class Round21Spec extends AnyFunSuite {
     fs.delete(rootP, true)
   }
 
+  test("lockClaimPublish: a healer renaming before the winner leaves the winner winning") {
+    // The interleaving behind a rare no-winner round of the race above,
+    // run in order on one thread: the winner holds the lock, and its
+    // filesystem lets a loser heal (rename the winner's tmp onto dst)
+    // right before the winner's own rename of the now-missing source.
+    val dir = java.nio.file.Files.createTempDirectory("graft_heal").toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    val rootP = new org.apache.hadoop.fs.Path(dir)
+    def writeTmp(name: String, txt: String): org.apache.hadoop.fs.Path = {
+      val p = new org.apache.hadoop.fs.Path(dir, name)
+      val o = local.create(p, true)
+      try o.write(txt.getBytes("UTF-8")) finally o.close()
+      p
+    }
+    val IC = graft.operators.IndexCommit
+    val dst = new org.apache.hadoop.fs.Path(dir, "_commit_v1")
+    val tmpL = writeTmp("tLoser", "agg=-\nbatchL\n")
+    var healed = false
+    val healFirst = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def rename(src: org.apache.hadoop.fs.Path,
+                          d: org.apache.hadoop.fs.Path): Boolean = {
+        healed = !IC.lockClaimPublish(local, rootP, tmpL, dst) && local.exists(dst)
+        super.rename(src, d)
+      }
+    }
+    healFirst.initialize(java.net.URI.create("file:///"), conf)
+    val won = IC.lockClaimPublish(healFirst, rootP, writeTmp("tWinner", "agg=-\nbatchW\n"), dst)
+    assert(healed, "the loser healed before the winner's rename")
+    assert(won, "the winner still wins")
+    local.delete(rootP, true)
+  }
+
   // ---- span count(1) == count(DISTINCT doc_id) on the unique pairs -----
 
   test("duplicateSpans plain count equals the distinct-count formula") {

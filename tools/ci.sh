@@ -1,11 +1,10 @@
 #!/usr/bin/env bash
-# Driver-shaped gate runner: compile -> test -> verify(sf0.01) ->
-# DuckDB compare -> bench(sf0.1). Mirrors what the round driver does.
+# Gate runner: compile -> test -> verify(sf0.01) -> DuckDB compare ->
+# benchmark (the `ordered` workload, full results checked against DuckDB).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF_VERIFY=${SF_VERIFY:-/root/testdata/sf0.01}
-SF_BENCH=${SF_BENCH:-/root/testdata/sf0.1}
 OUT=${OUT:-/tmp/graft_ci_verify}
 
 echo "== compile + test =="
@@ -18,8 +17,11 @@ sbt -batch "runMain graft.Verify $SF_VERIFY $OUT"
 echo "== DuckDB compare =="
 python3 tools/compare_oracle.py "$SF_VERIFY" "$OUT"
 
-echo "== bench @ $SF_BENCH =="
-SPARK_GRAFT_SF_DIR="$SF_BENCH" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  sbt -batch "runMain graft.Bench" | grep '"metric"'
+echo "== benchmark: ordered workload =="
+last=$(python3 perfbench/run.py --workload ordered --seed 42 --seconds 6 --trace 0 | tail -n 1)
+echo "$last"
+python3 -c 'import json, sys
+r = json.loads(sys.argv[1])
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$last"
 
 echo "== all gates green =="
