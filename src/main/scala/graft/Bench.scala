@@ -412,7 +412,7 @@ object Bench {
       // volumes byte-stable across ~50 calibration reps. Warm reps run
       // with the cold rep's fits memoized, so warm timings — the
       // headline metric — keep their steady-state meaning.
-      Fits.clearAll()
+      SessionMemo.clearAll()
       val shuf0 = meter.snapshot()
       meter.tag = name + "|cold"
       val cold = timeOnce(name, fn)

@@ -942,7 +942,7 @@ object DT {
   // The reference's tables() scans the R environment for data.tables;
   // the session analog is an explicit name → DT registry (also mirrored
   // as temp views so spark.sql sees the same names). Keyed by session
-  // identity (the Scale.planKey convention): temp views are per-session,
+  // identity: temp views are per-session,
   // so tables(spark) must list exactly the DTs whose views that session
   // can actually query.
   private val tableRegistry =

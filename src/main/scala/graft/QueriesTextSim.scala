@@ -28,19 +28,10 @@ object QueriesTextSim {
   private val seedCentroidMemo = new SessionMemo[Seq[Seq[Double]]]()
   private def seedCentroids(s: SparkSession, dir: String,
                             e: DataFrame): Seq[Seq[Double]] =
-    seedCentroidMemo.getOrElsePut(s"${System.identityHashCode(s)}:$dir")(
+    seedCentroidMemo.getOrElsePut(s, dir)(
       e.filter(col("vec_id") < 4).orderBy(col("vec_id"))
         .select(col("embedding")).collect()
         .map(_.getSeq[Double](0).toSeq).toSeq)
-
-  /** Forget the query-harness fits (index builds, seed centroids) —
-    * the same clear contract as the operator memos; tests use it to
-    * force a rebuild.
-    */
-  private[graft] def clearQueryFits(): Unit = {
-    bucketedIdxBuilt.clear()
-    seedCentroidMemo.clear()
-  }
   private def emb(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
   private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
 
@@ -911,7 +902,7 @@ object QueriesTextSim {
     ("q_dedup_incr_bucketed", ((s, dir) => {
       val d = docs(s, dir)
       val tbl = "graft_incr_idx_" + math.abs(dir.hashCode).toString
-      bucketedIdxBuilt.getOrElsePut(s"${System.identityHashCode(s)}:$dir") {
+      bucketedIdxBuilt.getOrElsePut(s, dir) {
         Dedup.saveBandIndexBucketed(
           d.filter(pmod(col("doc_id"), lit(7)) =!= 0), "doc_id", "text", tbl)
         true
@@ -1093,7 +1084,7 @@ object QueriesTextSim {
         "graft_lsh_idx_" + Integer.toHexString(dir.hashCode))
       // fit-once contract: the save is the nightly index build, the
       // timed part is the search through the LOADED index
-      bucketedIdxBuilt.getOrElsePut(s"${System.identityHashCode(s)}:$idx") {
+      bucketedIdxBuilt.getOrElsePut(s, idx) {
         Similarity.saveLshIndex(e, "vec_id", "embedding", idx,
           dim = 64, nBits = 4); true
       }
@@ -1119,7 +1110,7 @@ object QueriesTextSim {
       // index (post-save, mid-append) returns silently wrong top-k.
       val idx = RuntimeTmp.perPid(
         "graft_lsh_incr_idx_" + Integer.toHexString(dir.hashCode))
-      bucketedIdxBuilt.getOrElsePut(s"${System.identityHashCode(s)}:$idx") {
+      bucketedIdxBuilt.getOrElsePut(s, idx) {
         Similarity.saveLshIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, dim = 64, nBits = 4)
         Similarity.appendToLshIndex(s, idx, e.filter(col("vec_id") % 2 === 1),
@@ -1146,7 +1137,7 @@ object QueriesTextSim {
         .withColumn("embedding", transform(col("embedding"), _.cast("double")))
       val idx = RuntimeTmp.perPid(
         "graft_lsh_cpct_idx_" + Integer.toHexString(dir.hashCode))
-      bucketedIdxBuilt.getOrElsePut(s"${System.identityHashCode(s)}:$idx") {
+      bucketedIdxBuilt.getOrElsePut(s, idx) {
         Similarity.saveLshIndex(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", idx, dim = 64, nBits = 4)
         Similarity.appendToLshIndex(s, idx, e.filter(col("vec_id") % 2 === 1),
@@ -1212,7 +1203,7 @@ object QueriesTextSim {
       val idx = "/tmp/graft_ivf_idx_" + math.abs(dir.hashCode).toString
       // fit-once contract: the save is the nightly index build, the
       // timed part is the search through the LOADED index
-      bucketedIdxBuilt.getOrElsePut(s"${System.identityHashCode(s)}:$idx") {
+      bucketedIdxBuilt.getOrElsePut(s, idx) {
         Similarity.saveIvfIndex(s, idx, centroids); true
       }
       val loaded = Similarity.loadIvfIndex(s, idx)
@@ -1433,7 +1424,7 @@ object QueriesTextSim {
       val idx = s"/tmp/graft_cell_idx_${math.abs(dir.hashCode)}"
       // fit-once contract (the bucketed-index pattern above): build the
       // persisted cell index once per (session, corpus); time the search
-      bucketedIdxBuilt.getOrElsePut(s"${System.identityHashCode(s)}:$idx") {
+      bucketedIdxBuilt.getOrElsePut(s, idx) {
         Similarity.saveCellIndex(corpus, "vec_id", "embedding", centroids, idx)
         true
       }
@@ -1667,9 +1658,8 @@ object QueriesTextSim {
       // bench rep, and re-exporting 600k rows of CSV per rep would
       // dominate the timing (the bucketed-index memo convention; the
       // input parquet is immutable within a run, so the written CSV is
-      // too; Fits.clearAll evicts via clearQueryFits)
-      bucketedIdxBuilt.getOrElsePut(
-        s"fwrite_rt:${System.identityHashCode(s)}:$dir") {
+      // too; SessionMemo.clearAll evicts it)
+      bucketedIdxBuilt.getOrElsePut(s, s"fwrite_rt:$dir") {
         graft.sources.Fread.fwrite(
           Tables.load(s, dir, "lineitem").select(col("l_orderkey"),
             col("l_linenumber"), col("l_quantity"), col("l_extendedprice"),

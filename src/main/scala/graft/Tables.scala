@@ -17,15 +17,11 @@ object Tables {
   // Plan cache: spark.read.parquet re-reads footers for schema on every
   // call; ~100 registered queries × 2 bench runs made that a visible
   // fixed cost. DataFrames are immutable plans, so reuse is free.
-  private val planCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private val planCache = new SessionMemo[DataFrame]()
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // evict plans owned by stopped sessions so restarted-session
-    // workflows don't pin dead session state in driver memory
-    planCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    planCache.getOrElseUpdate((spark, sfDir, name), loadUncached(spark, sfDir, name))
-  }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    planCache.getOrElsePut(spark, s"$sfDir/$name.parquet")(
+      loadUncached(spark, sfDir, name))
 
   private def loadUncached(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts is TIMESTAMP(NANOS) parquet. How Spark surfaces that has

@@ -86,9 +86,8 @@ object Contamination {
                    n: Int = 13, hashGrams: Boolean = false): DataFrame = {
     val raw = grams(bench, idCol, textCol, n, hashGrams)
       .select(col("gram")).distinct()
-    gramSetCache.getOrElsePut(
-      System.identityHashCode(bench.sparkSession).toString + ":" +
-        raw.queryExecution.analyzed.semanticHash().toString)(
+    gramSetCache.getOrElsePut(bench.sparkSession,
+      raw.queryExecution.analyzed.semanticHash().toString)(
       raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
@@ -143,8 +142,8 @@ object Contamination {
                         fpp: Double = 0.01): DataFrame = {
     val benchGrams = benchGramSet(bench, idCol, textCol, n)
     val key = benchGrams.queryExecution.analyzed.semanticHash().toString +
-      s":$n:$fpp:${System.identityHashCode(corpus.sparkSession)}"
-    val bytes = bloomCache.getOrElsePut(key) {
+      s":$n:$fpp"
+    val bytes = bloomCache.getOrElsePut(corpus.sparkSession, key) {
       val hashes = benchGrams.select(xxhash64(col("gram")).as("h"))
         .collect().map(_.getLong(0))
       val bf = org.apache.spark.util.sketch.BloomFilter.create(
@@ -180,8 +179,8 @@ object Contamination {
     import org.apache.spark.sql.GraftSqlBridge
     val benchGrams = benchGramSet(bench, idCol, textCol, n)
     val key = benchGrams.queryExecution.analyzed.semanticHash().toString +
-      s":$n:$fpp:dist:${System.identityHashCode(corpus.sparkSession)}"
-    val bytes = bloomCache.getOrElsePut(key) {
+      s":$n:$fpp:dist"
+    val bytes = bloomCache.getOrElsePut(corpus.sparkSession, key) {
       val est = math.max(
         if (estimatedGrams > 0) estimatedGrams else benchGrams.count(), 1L)
       // BloomFilterAggregate caps est/bits at the session's runtime-bloom

@@ -142,8 +142,8 @@ object Dsir {
     // the selection tiers composing on the same weights (ranked top-n,
     // histogram threshold, downstream mixing) share ONE scoring pass
     // instead of re-tokenizing the corpus each.
-    cachePersisted(weightKey(corpus,
-      s"$idCol:$textCol:${filterKey(targetFilter)}:$buckets"), scored)
+    cachePersisted(corpus,
+      s"$idCol:$textCol:${filterKey(targetFilter)}:$buckets", scored)
   }
 
   /** The bucket log-ratio FIT of a (corpus, target-subset) pair: one
@@ -189,16 +189,15 @@ object Dsir {
   private def filterKey(c: Column): String = c.toString
 
   private def weightKey(df: DataFrame, tag: String): String =
-    System.identityHashCode(df.sparkSession).toString + ":" +
-      df.queryExecution.analyzed.semanticHash().toString + ":" +
-      df.columns.mkString(",") + ":" + tag
+    graft.SessionMemo.planKey(df) + ":" + tag
 
   private def memoFit(df: DataFrame, tag: String)
                      (body: => Array[Double]): Array[Double] =
-    fitCache.getOrElsePut(weightKey(df, tag))(body)
+    fitCache.getOrElsePut(df.sparkSession, weightKey(df, tag))(body)
 
-  private def cachePersisted(key: String, df: => DataFrame): DataFrame =
-    weightCache.getOrElsePut(key)(
+  private def cachePersisted(corpus: DataFrame, tag: String,
+                             df: => DataFrame): DataFrame =
+    weightCache.getOrElsePut(corpus.sparkSession, weightKey(corpus, tag))(
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Forget every memoized count fit and unpersist the weight tables

@@ -97,9 +97,8 @@ object Sampling {
     // the wrong fit across token counters.
     val totalsFrame = df.groupBy(col(sourceCol))
       .agg(sum(tokens.cast("long")).as("_graft_tot"))
-    val totals = totalsCache.getOrElsePut(
-      System.identityHashCode(df.sparkSession).toString + ":" +
-        totalsFrame.queryExecution.analyzed.semanticHash().toString)(
+    val totals = totalsCache.getOrElsePut(df.sparkSession,
+      totalsFrame.queryExecution.analyzed.semanticHash().toString)(
       totalsFrame
         .collect() // driver-small by construction: one row per source
         .map(r => r.getString(0) ->

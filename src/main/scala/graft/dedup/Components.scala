@@ -56,7 +56,7 @@ object Components {
     * O(log n) (i.e. all of them) with a wide margin.
     *
     * The labeling is session-memoized on the edge plan (the
-    * `Scale.planKey` pattern): a pipeline typically reads the SAME
+    * `SessionMemo.planKey` pattern): a pipeline typically reads the SAME
     * candidate-pair list twice — once for the cluster view, once to
     * prune to representatives — and the O(log n)-round job should run
     * once, not per reader. Same staleness contract as
@@ -64,20 +64,18 @@ object Components {
     * underlying files are overwritten within one session (incremental
     * corpus growth), call [[clearCheckpoints]] before re-labeling or
     * the stale labeling is served. Concurrent first calls for one key
-    * block on a single computation (`computeIfAbsent`), so the
+    * block on a single computation ([[graft.SessionMemo]]), so the
     * multi-round job never runs twice.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    val key = System.identityHashCode(edges.sparkSession).toString + ":" +
-      edges.queryExecution.analyzed.semanticHash().toString + ":" +
-      edges.columns.mkString(",") + ":" + srcCol + ":" + dstCol
-    memo.computeIfAbsent(key, _ => compute(edges, srcCol, dstCol, maxIter))
-  }
+                          maxIter: Int = 25): DataFrame =
+    memo.getOrElsePut(edges.sparkSession,
+      graft.SessionMemo.planKey(edges) + ":" + srcCol + ":" + dstCol)(
+      compute(edges, srcCol, dstCol, maxIter))
 
   /** Runs the star-contraction loop. Every frame this persists is
     * either unpersisted before return or (on success) handed to the
-    * pinned registry; the finally block releases whatever was live
+    * memo; the finally block releases whatever was live
     * when a mid-loop Spark failure unwound the stack, so a transient
     * job error cannot strand MEMORY_AND_DISK blocks with no handle.
     */
@@ -125,7 +123,6 @@ object Components {
       // The labeling is materialized — the star intermediates can go
       // now; only the (id, component) result stays pinned (until
       // clearCheckpoints).
-      track(res)
       val out = res
       res = null // success: the finally block must not release it
       out
@@ -206,23 +203,14 @@ object Components {
 
   // The (id, component) result of every distinct edge plan stays
   // persisted and memoized (several pipeline stages re-read the same
-  // labeling). Session-scoped registries so a long-lived session can
-  // reclaim them once results are consumed.
-  // ConcurrentHashMap, not TrieMap: computeIfAbsent is compute-ONCE
-  // (concurrent first callers for a key block instead of racing the
-  // multi-round labeling job twice and stranding the loser's blocks).
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  private val pinned = new scala.collection.mutable.ArrayBuffer[DataFrame]
-  private def track(df: DataFrame): Unit = pinned.synchronized { pinned += df }
+  // labeling), so a long-lived session can reclaim them once results
+  // are consumed.
+  private val memo = new graft.SessionMemo[DataFrame](_.unpersist())
 
   /** Unpersist + forget every labeling pinned by past
     * [[connectedComponents]] calls. Results already written/collected
     * are unaffected; an un-evaluated result frame would recompute from
     * the original edges.
     */
-  def clearCheckpoints(): Unit = pinned.synchronized {
-    memo.clear()
-    pinned.foreach(_.unpersist())
-    pinned.clear()
-  }
+  def clearCheckpoints(): Unit = memo.clear()
 }

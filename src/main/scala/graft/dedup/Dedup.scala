@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.text.TextFunctions
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -171,10 +172,11 @@ object Dedup {
     // opaque closure — those calls (the fuzzy contamination tier)
     // build fresh.
     if (pairFilter.nonEmpty) build
-    else cachePersisted(s"$baseKey:pairs:$bands:$threshold:$maxBucket", build)
+    else cachePersisted(df.sparkSession,
+      s"$baseKey:pairs:$bands:$threshold:$maxBucket", build)
   }
 
-  /** Session-scoped memoized persist (the Scale.planKey pattern):
+  /** Session-scoped memoized persist (the SessionMemo.planKey pattern):
     * several pipeline queries share one corpus's shingle+signature base
     * (pair listing, pruning, oversized-bucket audit, ...) — without the
     * registry each call pinned a fresh MEMORY_AND_DISK copy for the
@@ -182,11 +184,11 @@ object Dedup {
     */
   private def portableBaseKey(df: DataFrame, idCol: String, textCol: String,
                               k: Int, numHashes: Int): String =
-    s"${baseKeyOf(df)}:$idCol:$textCol:$k:$numHashes"
+    s"${SessionMemo.planKey(df)}:$idCol:$textCol:$k:$numHashes"
 
   private def portableBase(df: DataFrame, idCol: String, textCol: String,
                            k: Int, numHashes: Int): DataFrame =
-    cachePersisted(portableBaseKey(df, idCol, textCol, k, numHashes),
+    cachePersisted(df.sparkSession, portableBaseKey(df, idCol, textCol, k, numHashes),
       df.select(col(idCol).as("id"), col(textCol).as("text"))
         .withColumn("sh", graft.plans.PortableShingles(
           TextFunctions.wsTokens(TextFunctions.normalize(col("text"))), k))
@@ -197,8 +199,9 @@ object Dedup {
     * in [[graft.SessionMemo]] (one implementation, shared with
     * Similarity's persisted cell indexes and the fit memos).
     */
-  private def cachePersisted(key: String, df: => DataFrame): DataFrame =
-    portableBaseCache.getOrElsePut(key)(
+  private def cachePersisted(spark: SparkSession, key: String,
+                             df: => DataFrame): DataFrame =
+    portableBaseCache.getOrElsePut(spark, key)(
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Slim (id, band, bh) banding of a [[portableBase]]: only those three
@@ -271,7 +274,7 @@ object Dedup {
     val batchB = portableBase(batch, idCol, textCol, k, numHashes)
     incrementalPairs(
       baseB.select(col("id"), col("sh")),
-      cappedBucketsFor(
+      cappedBucketsFor(base.sparkSession,
         s"${portableBaseKey(base, idCol, textCol, k, numHashes)}:buckets:$bands:$maxBucket",
         portableBandedOf(baseB, numHashes, bands), maxBucket),
       batchB, portableBandedOf(batchB, numHashes, bands),
@@ -338,8 +341,7 @@ object Dedup {
     val batchB = portableBase(batch, idCol, textCol, k, numHashes)
     incrementalPairs(
       spark.table(s"${table}_shingles"),
-      cappedBucketsFor(
-        s"idxbuckets:tbl=$table:${System.identityHashCode(spark)}:$bands:$maxBucket",
+      cappedBucketsFor(spark, s"idxbuckets:tbl=$table:$bands:$maxBucket",
         spark.table(s"${table}_banded"), maxBucket),
       batchB, portableBandedOf(batchB, numHashes, bands),
       threshold, broadcastBatch)
@@ -417,8 +419,7 @@ object Dedup {
     val batchB = portableBase(batch, idCol, textCol, k, numHashes)
     incrementalPairs(
       bandIndexShingles(spark, indexPath),
-      cappedBucketsFor(
-        s"idxbuckets:path=$indexPath:${System.identityHashCode(spark)}:$bands:$maxBucket",
+      cappedBucketsFor(spark, s"idxbuckets:path=$indexPath:$bands:$maxBucket",
         bandIndexBanded(spark, indexPath), maxBucket),
       batchB, portableBandedOf(batchB, numHashes, bands),
       threshold, broadcastBatch)
@@ -448,10 +449,6 @@ object Dedup {
       .drop("bb", "sig")
   }
 
-  /** Shared candidate→verify tail of the incremental family: bucket the
-    * base banding (capped), join the batch banding, verify candidates
-    * with exact Jaccard over the two shingle sets.
-    */
   /** The corpus side of an incremental search, aggregated to capped
     * (band, bh, base_ids) buckets and MEMOIZED persisted under
     * `memoKey`: the aggregation is index-version-invariant, so without
@@ -464,18 +461,13 @@ object Dedup {
     * explicitly on overwrite/append). One daily batch per session pays
     * exactly the old cost; every later call is a cached scan.
     */
-  private def cappedBucketsFor(memoKey: String, banded: DataFrame,
-                               maxBucket: Int): DataFrame =
-    cachePersisted(memoKey,
+  private def cappedBucketsFor(spark: SparkSession, memoKey: String,
+                               banded: DataFrame, maxBucket: Int): DataFrame =
+    cachePersisted(spark, memoKey,
       banded.groupBy(col("band"), col("bh"))
         .agg(collect_list(col("id")).as("base_ids"))
         .filter(size(col("base_ids")) <= maxBucket))
 
-  /** Evict the memoized bucket aggregations of a persisted index —
-    * called by every writer that changes the index's on-disk state
-    * (overwrite OR append), so a stale in-session memo can never serve
-    * a post-append search.
-    */
   /** Forget the memoized bucket aggregation of the band index at
     * `path` — for callers that know the on-disk index changed OUTSIDE
     * this session's writers (a nightly refit by another job). This
@@ -484,9 +476,18 @@ object Dedup {
     */
   def evictIndex(path: String): Unit = evictIndexBuckets(s"path=$path")
 
+  /** Evict the memoized bucket aggregations of a persisted index —
+    * called by every writer that changes the index's on-disk state
+    * (overwrite OR append), so a stale in-session memo can never serve
+    * a post-append search.
+    */
   private def evictIndexBuckets(tag: String): Unit =
     portableBaseCache.evictPrefix(s"idxbuckets:$tag:")
 
+  /** Shared candidate→verify tail of the incremental family: bucket the
+    * base banding (capped), join the batch banding, verify candidates
+    * with exact Jaccard over the two shingle sets.
+    */
   private def incrementalPairs(baseSh: DataFrame, buckets: DataFrame,
                                batchB: DataFrame, batchBanded: DataFrame,
                                threshold: Double,
@@ -540,16 +541,7 @@ object Dedup {
     oversizedBuckets(banded, Seq("band", "bh"), maxBucket)
   }
 
-  // Keyed like Scale.planKey — session identity + analyzed semanticHash +
-  // the COLUMN LIST (a 32-bit semanticHash alone can collide across
-  // re-written tables; the column names cheaply disambiguate the common
-  // same-shape-different-schema case).
-  private def baseKeyOf(df: DataFrame): String =
-    System.identityHashCode(df.sparkSession).toString + ":" +
-      df.queryExecution.analyzed.semanticHash().toString + ":" +
-      df.columns.mkString(",")
-
-  private val portableBaseCache = new graft.SessionMemo[DataFrame](_.unpersist())
+  private val portableBaseCache = new SessionMemo[DataFrame](_.unpersist())
 
   /** Keys of the currently-memoized persisted bases/pairs — the OWNED
     * set tests must assert on. `sparkContext.getPersistentRDDs` is a
@@ -572,7 +564,8 @@ object Dedup {
     * MEMORY_AND_DISK base forever).
     */
   def clearBases(df: Option[DataFrame] = None): Unit = df match {
-    case Some(d) => portableBaseCache.evictPrefix(baseKeyOf(d) + ":")
+    case Some(d) =>
+      portableBaseCache.evictPrefix(d.sparkSession, SessionMemo.planKey(d) + ":")
     case None => portableBaseCache.clear()
   }
 
@@ -765,7 +758,8 @@ object Dedup {
         s"violated: $idCol value ${dup.head.get(0)} appears on more than " +
         "one input row — per-span doc counts would overcount")
     }
-    cachePersisted(s"${baseKeyOf(df)}:spans:$idCol:$textCol:$k:$w",
+    cachePersisted(df.sparkSession,
+      s"${SessionMemo.planKey(df)}:spans:$idCol:$textCol:$k:$w",
       df.withColumn("_ct", TextFunctions.canonicalize(col(textCol)))
         .select(col(idCol).as("doc_id"),
           explode(winnowFingerprints(col("_ct"), k, w)).as("span_fp")))

@@ -32,8 +32,8 @@ object Sketches {
              seed: Int): CountMinSketch = {
     val frame = df.select(c.cast("string").as("_graft_x"))
     val key = frame.queryExecution.analyzed.semanticHash().toString +
-      s":$eps:$confidence:$seed:${System.identityHashCode(df.sparkSession)}"
-    cmsCache.getOrElsePut(key) {
+      s":$eps:$confidence:$seed"
+    cmsCache.getOrElsePut(df.sparkSession, key) {
       val bytes = frame
         .agg(count_min_sketch(col("_graft_x"), lit(eps), lit(confidence),
           lit(seed)).as("s"))

@@ -95,8 +95,7 @@ object GlobalOrdered {
     * fit shared by a tie-agnostic op and a pinning op logs once per
     * wording, and collapseWarnings counts the same pairs.
     */
-  private val collapseSeen =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
+  private val collapseSeen = new graft.SessionMemo[Unit]()
 
   /** Test/visibility hook: number of memoized bounds fits. */
   private[graft] def boundsFitCount: Int = boundsCache.size
@@ -120,8 +119,7 @@ object GlobalOrdered {
     * bucket count, computed (and warned about) once per fit — bench
     * reps of a wide-reach query must not re-log every rep.
     */
-  private val phantomGuardCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val phantomGuardCache = new graft.SessionMemo[Int]()
 
   /** Test/visibility counter: fits whose phantom estimate forced a
     * bucket reduction.
@@ -251,9 +249,7 @@ object GlobalOrdered {
     * monotone for ANY bound set).
     */
   private def fitKeyOf(df: DataFrame, key: Column, buckets: Int): String =
-    System.identityHashCode(df.sparkSession).toString + ":" +
-      df.queryExecution.analyzed.semanticHash().toString + ":" +
-      keyText(df, key) + ":" + buckets
+    graft.SessionMemo.planKey(df) + ":" + keyText(df, key) + ":" + buckets
 
   /** RAW bucket bounds (duplicates kept — they are the skew signal):
     * one-pass approxQuantile for numeric keys; a bounded deterministic
@@ -264,7 +260,7 @@ object GlobalOrdered {
                         buckets: Int): (Array[Any], String) = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val memoKey = fitKeyOf(df, key, buckets)
-    (boundsCache.getOrElsePut(memoKey) {
+    (boundsCache.getOrElsePut(df.sparkSession, memoKey) {
       fitScans.incrementAndGet()
       val (frame, numeric) = fitFrame(df, key)
       // buckets=1 needs no bounds at all (and approxQuantile returns
@@ -387,16 +383,16 @@ object GlobalOrdered {
     val collapsed = raw.nonEmpty && distinctB.length < (raw.length + 1) / 2
     // warning + counters fire once per memoized FIT (not per prep call /
     // bench rep); clearFits resets the seen-set with the bounds
-    if (collapsed &&
-        collapseSeen.putIfAbsent(fitTag + ":" + tieAgnostic, true).isEmpty) {
-      collapseWarnings.incrementAndGet()
-      if (tieAgnostic) collapseReroutes.incrementAndGet()
-      System.err.println(
-        s"[graft] GlobalOrdered: bucket fit collapsed to ${distinctB.length + 1} " +
-          s"of $buckets requested buckets (near-constant order key)" +
-          (if (tieAgnostic) "; scattering tie blocks via content-hash tie-break"
-           else "; this op pins tie blocks to one bucket — expect reduced parallelism"))
-    }
+    if (collapsed)
+      collapseSeen.getOrElsePut(df.sparkSession, fitTag + ":" + tieAgnostic) {
+        collapseWarnings.incrementAndGet()
+        if (tieAgnostic) collapseReroutes.incrementAndGet()
+        System.err.println(
+          s"[graft] GlobalOrdered: bucket fit collapsed to ${distinctB.length + 1} " +
+            s"of $buckets requested buckets (near-constant order key)" +
+            (if (tieAgnostic) "; scattering tie blocks via content-hash tie-break"
+             else "; this op pins tie blocks to one bucket — expect reduced parallelism"))
+      }
     if (collapsed && tieAgnostic) {
       val h = xxhash64(df.columns.map(col): _*)
       // base counts RAW (duplicated) bounds below the key, so each
@@ -480,7 +476,7 @@ object GlobalOrdered {
     */
   private def aliasFit(out: DataFrame, key: Column, p: Prepped): DataFrame = {
     p.fit.foreach { case (raw, b) =>
-      boundsCache.getOrElsePut(fitKeyOf(out, key, b))(raw)
+      boundsCache.getOrElsePut(out.sparkSession, fitKeyOf(out, key, b))(raw)
     }
     out
   }
@@ -1061,7 +1057,7 @@ object GlobalOrdered {
         val (raw, fitTag) = boundsFor(df, time, eb)
         val est = phantomRatioEst(raw, (n - 1).toDouble)
         if (est <= PHANTOM_RATIO_MAX) eb
-        else phantomGuardCache.getOrElseUpdate(fitTag + ":" + n, {
+        else phantomGuardCache.getOrElsePut(df.sparkSession, fitTag + ":" + n) {
           val chosen = math.max(1, (eb * PHANTOM_RATIO_MAX / est).toInt)
           phantomGuardReductions.incrementAndGet()
           System.err.println(
@@ -1069,7 +1065,7 @@ object GlobalOrdered {
               s"the data at $eb buckets (reach ${n - 1} spans many buckets); " +
               s"reducing to $chosen buckets to cap duplication")
           chosen
-        })
+        }
       }
     val p = prep(df, time, asc = true, useB)
     val b = p.b

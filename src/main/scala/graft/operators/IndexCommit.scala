@@ -289,19 +289,18 @@ object IndexCommit {
     * fresh; writers that REUSE a state's paths (reset → rebuild at the
     * same root) evict via [[evictReadPlans]]. Nothing here caches
     * RESULTS — the memoized object is the immutable logical plan over
-    * the committed files, recomputed by every action.
+    * the committed files, recomputed by every action. Keys are
+    * `root NUL sub NUL state`: NUL cannot occur in a path, so one root's
+    * prefix never matches a sibling root that extends it (`/x/idx` vs
+    * `/x/idx2`).
     */
-  private val readPlanCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, State), DataFrame]
+  private val readPlanCache = new graft.SessionMemo[DataFrame]()
+  private val Sep = "\u0000"
 
-  /** Forget memoized read plans — all of them, or one root's. Called
-    * by [[reset]] (same-path rebuild) and [[graft.Fits.clearAll]] (the
-    * bench's cleared-cold discipline).
+  /** Forget one root's memoized read plans, in every session. Called
+    * by [[reset]] (same-path rebuild).
     */
-  def evictReadPlans(root: String = ""): Unit =
-    readPlanCache.filterInPlace { case ((s, r, _, _), _) =>
-      !s.sparkContext.isStopped && (root.nonEmpty && r != root)
-    }
+  def evictReadPlans(root: String): Unit = readPlanCache.evictPrefix(root + Sep)
 
   /** Cheap change-detector for the VERSION-0 legacy state: a root with
     * no manifest can gain files by a direct write to `<root>/<sub>`
@@ -324,17 +323,10 @@ object IndexCommit {
 
   def readComponent(spark: SparkSession, root: String, sub: String,
                     state: State): DataFrame = {
-    // drop entries pinned to STOPPED sessions on every read — without
-    // the sweep a long-lived multi-session service leaks one DataFrame
-    // per (root, sub, state) per dead session until an evict happens to
-    // run (VERDICT r21 "What's wrong" #5); the map is small (one entry
-    // per live component), so the walk is noise
-    readPlanCache.filterInPlace { case ((s, _, _, _), _) =>
-      !s.sparkContext.isStopped }
     val subKey =
       if (state.version == 0) sub + "#" + legacyDirFingerprint(spark, root, sub)
       else sub
-    readPlanCache.getOrElseUpdate((spark, root, subKey, state),
+    readPlanCache.getOrElsePut(spark, root + Sep + subKey + Sep + state)(
       spark.read.parquet(componentPaths(root, sub, state): _*))
   }
 

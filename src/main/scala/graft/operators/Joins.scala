@@ -179,30 +179,27 @@ object Joins {
     }
   }
 
+  /** Passed dup-guard probes, session-memoized (optimization r22): the
+    * pre-flight aggregation is a deterministic property of (plan, keys),
+    * and updateJoin-style callers re-run it per bench rep / per pipeline
+    * step — a full probe-side job each time. Only SUCCESS memoizes (a
+    * failing probe throws, and a throwing compute leaves no entry, so a
+    * corrupt input keeps failing loudly); [[graft.SessionMemo.clearAll]]
+    * clears, the cleared-cold discipline re-pays it per cold rep. Same
+    * staleness contract as every fit memo: data rewritten under an
+    * identical plan mid-session needs a clear.
+    */
+  private val noDupCache = new graft.SessionMemo[java.lang.Boolean]()
+
   /** mult="error": fail when any probe row matches more than one x row.
     * Plan-time fast accept when uniqueness is provable from the plan
     * ([[provablyUniqueOn]]) — no pre-flight job; otherwise one cheap
     * partial-aggregation probe.
     */
-  /** Passed dup-guard probes, session-memoized (optimization r22): the
-    * pre-flight aggregation is a deterministic property of (plan, keys),
-    * and updateJoin-style callers re-run it per bench rep / per pipeline
-    * step — a full probe-side job each time. Only SUCCESS memoizes (a
-    * failing probe throws before registration, so a corrupt input keeps
-    * failing loudly); [[graft.Fits.clearAll]] clears, the cleared-cold
-    * discipline re-pays it per cold rep. Same staleness contract as
-    * every fit memo: data rewritten under an identical plan mid-session
-    * needs a clearFits().
-    */
-  private val noDupCache = new graft.SessionMemo[java.lang.Boolean]()
-
-  private[graft] def clearFits(): Unit = noDupCache.clear()
-
   def assertNoDup(x: DataFrame, on: Seq[String]): Unit = {
     if (provablyUniqueOn(x, on)) return
-    val key = System.identityHashCode(x.sparkSession).toString + ":" +
-      x.queryExecution.analyzed.semanticHash().toString + ":" + on.mkString(",")
-    noDupCache.getOrElsePut(key) {
+    val key = graft.SessionMemo.planKey(x) + ":" + on.mkString(",")
+    noDupCache.getOrElsePut(x.sparkSession, key) {
       val dups = x.groupBy(on.map(col): _*).count()
         .filter(col("count") > 1).limit(1).count()
       // message parity with src/bmerge.c:417
@@ -625,30 +622,25 @@ object Joins {
     }
   }
 
+  // estimate cache: the two approxQuantile stats jobs are plan-time
+  // overhead paid per overlap query; identical (plan, cols) inputs reuse
+  // the previous estimate (driver-local, like any other plan cache)
+  private val binWidthCache = new graft.SessionMemo[Long]()
+
   /** Bin width for [[overlapBinned]]: max of the two sides' median
     * interval lengths (wider side dominates the per-interval bin
     * count), floored at 1.
     */
-  // estimate cache: the two approxQuantile stats jobs are plan-time
-  // overhead paid per overlap query; identical (plan, cols) inputs reuse
-  // the previous estimate (driver-local, like any other plan cache)
-  private val binWidthCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   def estimateBinWidth(x: DataFrame, xs: String, xe: String,
                        y: DataFrame, ys: String, ye: String): Long = {
-    // session identity is part of the key (matching Scale.planKey): a
-    // NEW session re-reading changed data at the same plan shape must
-    // not reuse a stale width
-    val key = s"${System.identityHashCode(x.sparkSession)}:" +
-      s"${x.queryExecution.analyzed.semanticHash()}:$xs:$xe:" +
-      s"${y.queryExecution.analyzed.semanticHash()}:$ys:$ye"
-    binWidthCache.getOrElseUpdate(key, {
+    val key = s"${graft.SessionMemo.planKey(x)}:$xs:$xe:" +
+      s"${graft.SessionMemo.planKey(y)}:$ys:$ye"
+    binWidthCache.getOrElsePut(x.sparkSession, key) {
       def med(df: DataFrame, s: String, e: String): Double =
         df.select((col(e).cast("double") - col(s).cast("double")).as("len"))
           .stat.approxQuantile("len", Array(0.5), 0.05).headOption.getOrElse(1.0)
       math.max(1L, math.ceil(math.max(med(x, xs, xe), med(y, ys, ye))).toLong)
-    })
+    }
   }
 
   /** Scale path for overlap joins with few/no `by` keys: explode each

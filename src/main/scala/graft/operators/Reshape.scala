@@ -14,12 +14,10 @@ object Reshape {
     * a distinct-values JOB at plan-build time, so every bench rep /
     * pipeline step re-paid a full domain scan for a domain that is a
     * deterministic property of (plan, column). Cleared by
-    * [[graft.Fits.clearAll]] (cold reps re-pay); same mid-session
+    * [[graft.SessionMemo.clearAll]] (cold reps re-pay); same mid-session
     * staleness contract as every fit memo.
     */
   private val domainCache = new graft.SessionMemo[AnyRef]()
-
-  private[graft] def clearFits(): Unit = domainCache.clear()
 
   /** The pivot domain exactly as Spark's implicit `pivot(col)` computes
     * it (distinct incl. null, ascending sort, [[MAX_PIVOT]] cap),
@@ -27,9 +25,8 @@ object Reshape {
     * the explicit-values forms lives in [[pivotDomain]].
     */
   private def pivotDomainImplicit(df: DataFrame, rhs: String): Seq[Any] =
-    domainCache.getOrElsePut(
-      System.identityHashCode(df.sparkSession).toString + ":" +
-        df.queryExecution.analyzed.semanticHash().toString + ":dom:" + rhs) {
+    domainCache.getOrElsePut(df.sparkSession,
+      graft.SessionMemo.planKey(df) + ":dom:" + rhs) {
       val vals = df.select(col(rhs)).distinct().sort(col(rhs))
         .limit(MAX_PIVOT + 1).collect().map(_.get(0)).toSeq
       require(vals.size <= MAX_PIVOT,
@@ -350,9 +347,8 @@ object Reshape {
     val keys = (lhs :+ rhs).map(col)
     // the probe is a deterministic property of (plan, keys) — memoized
     // like the pivot domains (one job per session instead of per call)
-    val hasDup = domainCache.getOrElsePut(
-      System.identityHashCode(df.sparkSession).toString + ":" +
-        df.queryExecution.analyzed.semanticHash().toString + ":dup:" +
+    val hasDup = domainCache.getOrElsePut(df.sparkSession,
+      graft.SessionMemo.planKey(df) + ":dup:" +
         (lhs :+ rhs).mkString(",")) {
       java.lang.Boolean.valueOf(!df.groupBy(keys: _*).count()
         .filter(col("count") > 1).limit(1).isEmpty)
@@ -490,9 +486,8 @@ object Reshape {
     // session-memoized like the implicit domain (one job per session,
     // not per call); the string/non-null form the explicit-values
     // callers (dcastComplete & co.) consume
-    domainCache.getOrElsePut(
-      System.identityHashCode(df.sparkSession).toString + ":" +
-        df.queryExecution.analyzed.semanticHash().toString + ":domstr:" + rhs) {
+    domainCache.getOrElsePut(df.sparkSession,
+      graft.SessionMemo.planKey(df) + ":domstr:" + rhs) {
       val vals = df.select(rhs).distinct().filter(col(rhs).isNotNull)
         .orderBy(col(rhs)).limit(MAX_PIVOT + 1)
         .collect().map(_.get(0).toString).toSeq

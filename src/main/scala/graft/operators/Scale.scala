@@ -59,14 +59,14 @@ object Scale {
     * (indexes are per-session, like the reference's per-table attribute).
     */
   private val indexRegistry =
-    scala.collection.concurrent.TrieMap.empty[(String, Seq[String]), DataFrame]
+    new graft.SessionMemo[(Seq[String], DataFrame)](_._2.unpersist())
 
-  private def planKey(df: DataFrame): String =
-    // session identity is part of the key: an identical plan in a NEW
-    // session must not route to a cached DataFrame bound to a stopped one
-    System.identityHashCode(df.sparkSession).toString + ":" +
-      df.queryExecution.analyzed.semanticHash().toString + ":" +
-      df.columns.mkString(",")
+  /** Key prefix of every index on `df`'s table. */
+  private def tableKey(df: DataFrame): String = graft.SessionMemo.planKey(df) + ":"
+
+  /** `df`'s registered indexes, as (index columns, sorted copy). */
+  private def indexesOn(df: DataFrame): Seq[(Seq[String], DataFrame)] =
+    indexRegistry.entries(df.sparkSession, tableKey(df)).map(_._2)
 
   /** setkey's CLUSTER-PERSISTENT form (SURVEY §2.6 "persisted sorted
     * copy"; R/setkey.R's sorted attribute made durable): write the
@@ -133,30 +133,29 @@ object Scale {
 
   /** setindex(): build (or reuse) the sorted cached copy for `cols`. */
   def setIndex(df: DataFrame, cols: Seq[String]): DataFrame =
-    indexRegistry.getOrElseUpdate((planKey(df), cols),
-      df.repartitionByRange(cols.map(col): _*)
+    indexRegistry.getOrElsePut(df.sparkSession,
+        tableKey(df) + cols.mkString("\u0000")) {
+      (cols, df.repartitionByRange(cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }._2
 
   /** Route a filter whose referenced columns include an index's leading
     * column to the indexed copy (leading-prefix rule, like the
     * reference's secondary-key usage).
     */
-  def indexFor(df: DataFrame, predicateRefs: Set[String]): Option[DataFrame] = {
-    val k = planKey(df)
-    indexRegistry.collectFirst {
-      case ((pk, cols), idx) if pk == k && predicateRefs.contains(cols.head) => idx
+  def indexFor(df: DataFrame, predicateRefs: Set[String]): Option[DataFrame] =
+    indexesOn(df).collectFirst {
+      case (cols, idx) if predicateRefs.contains(cols.head) => idx
     }
-  }
 
   /** [[indexFor]] with the predicate refs resolved from the Column
     * itself. The analysis pass runs only when this table has at least
     * one registered index (the common un-indexed path stays zero-cost).
     */
   def indexedSource(df: DataFrame, cond: Column): Option[DataFrame] = {
-    if (indexRegistry.isEmpty) return None   // zero cost when nothing is indexed
-    val k = planKey(df)
-    if (!indexRegistry.keySet.exists(_._1 == k)) None
+    if (indexRegistry.size == 0) return None   // zero cost when nothing is indexed
+    if (indexesOn(df).isEmpty) None
     else indexFor(df, org.apache.spark.sql.GraftSqlBridge.resolvedFilterRefs(df, cond))
   }
 
@@ -170,7 +169,8 @@ object Scale {
 
   @volatile private var autoIndexThreshold: Int = 0   // 0 = off (default)
   private val eqFilterCounts =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Int]
+    scala.collection.concurrent.TrieMap
+      .empty[(org.apache.spark.sql.SparkSession, String, String), Int]
 
   /** Opt in: auto-register an index once `threshold` equality filters
     * have hit the same unindexed column of the same table.
@@ -194,13 +194,12 @@ object Scale {
     */
   def autoIndexNote(df: DataFrame, cond: Column): Unit = {
     if (autoIndexThreshold <= 0) return
-    val k = planKey(df)
+    val k = graft.SessionMemo.planKey(df)
     org.apache.spark.sql.GraftSqlBridge.equalityFilterCols(df, cond).foreach { c =>
-      val covered = indexRegistry.keySet.exists {
-        case (pk, cols) => pk == k && cols.head == c
-      }
+      val covered = indexesOn(df).exists(_._1.head == c)
       if (!covered) {
-        val n = eqFilterCounts.updateWith((k, c))(p => Some(p.getOrElse(0) + 1)).get
+        val n = eqFilterCounts.updateWith((df.sparkSession, k, c))(p =>
+          Some(p.getOrElse(0) + 1)).get
         if (n >= autoIndexThreshold) setIndex(df, Seq(c))
       }
     }
@@ -209,20 +208,12 @@ object Scale {
   /** Column sets of every registered secondary index on `df` — the
     * indices() metadata surface (R/tables.R INDICES column).
     */
-  def indexesOf(df: DataFrame): Seq[Seq[String]] = {
-    val k = planKey(df)
-    indexRegistry.keys.collect { case (pk, cols) if pk == k => cols }.toSeq
-  }
+  def indexesOf(df: DataFrame): Seq[Seq[String]] = indexesOn(df).map(_._1)
 
   /** Drop all registered indexes for a table (or every index). */
   def clearIndexes(df: Option[DataFrame] = None): Unit = df match {
-    case Some(d) =>
-      val k = planKey(d)
-      indexRegistry.keys.filter(_._1 == k).foreach { key =>
-        indexRegistry.remove(key).foreach(_.unpersist())
-      }
-    case None =>
-      indexRegistry.keys.foreach(key => indexRegistry.remove(key).foreach(_.unpersist()))
+    case Some(d) => indexRegistry.evictPrefix(d.sparkSession, tableKey(d))
+    case None => indexRegistry.clear()
   }
 
   /** datatable.join.many / allow.cartesian analog — see

@@ -130,10 +130,8 @@ object Similarity {
     // hatch as semIncremental's broadcastBatch (ADVICE r17).
     val qe =
       if (countsCollectable(nBits)) {
-        val cnts = collectedSigCounts(
-          s"lshcounts:${System.identityHashCode(corpus.sparkSession)}:" +
-            s"${corpus.queryExecution.analyzed.semanticHash()}:" +
-            s"$idCol:$vecCol:$dim:$nBits",
+        val cnts = collectedSigCounts(corpus.sparkSession,
+          s"lshcounts:${graft.SessionMemo.planKey(corpus)}:$idCol:$vecCol:$dim:$nBits",
           lshBucketCounts(c))
         q.filter(sigIn(
           cnts.collect { case (s, n) if n <= maxBucket => s }.toSeq.sorted))
@@ -172,9 +170,9 @@ object Similarity {
     * cleared-cold discipline pays the full cost on every cold rep) and
     * evicted by the index writers.
     */
-  private def collectedSigCounts(key: String,
+  private def collectedSigCounts(spark: SparkSession, key: String,
                                  counts: => DataFrame): Map[String, Long] =
-    fitCache.getOrElsePut(key)(
+    fitCache.getOrElsePut(spark, key)(
       counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
       .asInstanceOf[Map[String, Long]]
 
@@ -304,10 +302,8 @@ object Similarity {
     // per-search job rounds over bounded-by-construction data)
     val (qe, fbq0) =
       if (countsCollectable(nBits)) {
-        val cnts = collectedSigCounts(
-          s"lshcounts:${System.identityHashCode(corpus.sparkSession)}:" +
-            s"${corpus.queryExecution.analyzed.semanticHash()}:" +
-            s"$idCol:$vecCol:$dim:$nBits",
+        val cnts = collectedSigCounts(corpus.sparkSession,
+          s"lshcounts:${graft.SessionMemo.planKey(corpus)}:$idCol:$vecCol:$dim:$nBits",
           lshBucketCounts(c))
         (q.filter(sigIn(
            cnts.collect { case (s, n) if n <= maxBucket => s }.toSeq.sorted)),
@@ -482,9 +478,8 @@ object Similarity {
     val q = lshSignedQueries(queries, idCol, vecCol, dim, nBits)
     val qe =
       if (countsCollectable(nBits)) {
-        val cnts = collectedSigCounts(
-          s"lshidxcounts:$root:${System.identityHashCode(spark)}:" +
-            s"${st.version}:${st.aggDir.getOrElse("-")}",
+        val cnts = collectedSigCounts(spark,
+          s"lshidxcounts:$root:${st.version}:${st.aggDir.getOrElse("-")}",
           spark.read.parquet(lshCountsPath(root, st))
             .select(col("sig"), col("n")))
         q.filter(sigIn(
@@ -625,12 +620,9 @@ object Similarity {
   // corpora should still clearFits() between corpora.
   private val fitCache = new graft.SessionMemo[AnyRef]()
 
-  private def memoFit[T <: AnyRef](df: DataFrame, tag: String)(body: => T): T = {
-    val key = System.identityHashCode(df.sparkSession).toString + ":" +
-      df.queryExecution.analyzed.semanticHash().toString + ":" +
-      df.columns.mkString(",") + ":" + tag
-    fitCache.getOrElsePut(key)(body).asInstanceOf[T]
-  }
+  private def memoFit[T <: AnyRef](df: DataFrame, tag: String)(body: => T): T =
+    fitCache.getOrElsePut(df.sparkSession, graft.SessionMemo.planKey(df) + ":" + tag)(body)
+      .asInstanceOf[T]
 
   // Persisted-DataFrame memo (same SessionMemo semantics as Dedup's
   // base cache): currently holds the capped corpus side of
@@ -639,8 +631,9 @@ object Similarity {
   // table. Evicted by the writers that change the index on disk.
   private val persistedCache = new graft.SessionMemo[DataFrame](_.unpersist())
 
-  private def cachePersisted(key: String, df: => DataFrame): DataFrame =
-    persistedCache.getOrElsePut(key)(
+  private def cachePersisted(spark: SparkSession, key: String,
+                             df: => DataFrame): DataFrame =
+    persistedCache.getOrElsePut(spark, key)(
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def evictPersisted(tagPrefix: String): Unit =
@@ -864,8 +857,7 @@ object Similarity {
     // persisted per (session, path, maxCell) so repeated searches in a
     // session skip the cell-table re-read + re-count (the
     // Dedup.cappedBucketsFor twin); writers evict on overwrite/append.
-    val corpus = cachePersisted(
-      s"cellcorpus:$indexPath:${System.identityHashCode(spark)}:$maxCell", {
+    val corpus = cachePersisted(spark, s"cellcorpus:$indexPath:$maxCell", {
         val cells = cellIndexCells(spark, indexPath)
         val counts = cells.groupBy(col("cell")).agg(count(lit(1)).as("_n"))
           .filter(col("_n") <= maxCell).select(col("cell"))
@@ -1171,8 +1163,7 @@ object Similarity {
     * as every other fit memo here.
     */
   def loadIvfIndex(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    fitCache.getOrElsePut(
-      s"ivfcents:$path:${System.identityHashCode(spark)}")(
+    fitCache.getOrElsePut(spark, s"ivfcents:$path:")(
       spark.read.parquet(s"$path/ivf").orderBy(col("cell"))
         .select(col("vec")).collect().map(_.getSeq[Double](0).toSeq).toSeq)
       .asInstanceOf[Seq[Seq[Double]]]

@@ -33,7 +33,7 @@ object CodegenAB {
       spark.sparkContext.setLogLevel("ERROR")
       graft.PlanLint.silenceBoundedWindowWarning()
       graft.Tables.names.foreach(n => graft.Tables.load(spark, sfDir, n).count())
-      graft.Fits.clearAll()
+      graft.SessionMemo.clearAll()
       val fn = graft.SparkEntry.queries(q)
       fn(spark, sfDir).count() // cold
       val times = (1 to reps).map { _ =>
@@ -45,7 +45,7 @@ object CodegenAB {
         s"reps=${times.map(t => f"$t%.3f").mkString(",")}")
       // unpersist memoized frames while THEIR context is still alive —
       // an evict after stop() NPEs in the dead BlockManager
-      graft.Fits.clearAll()
+      graft.SessionMemo.clearAll()
       spark.stop()
       // a fresh session per config: SparkSession.builder().config on an
       // existing session would silently keep the old codegen conf

@@ -304,11 +304,11 @@ object ScaleProbe {
                   gen: Long => DataFrame, batchRows: Long = 100000L,
                   expect: String = "independent"): Unit = {
       val volumes = Seq(nSmall, nLarge).map { n =>
-        graft.Fits.clearAll()
+        graft.SessionMemo.clearAll()
         val corpus = materialized(tag, n, gen)
         val loc = s"incrprobe_${name}_$n"
         build(corpus, loc) // nightly fit: excluded from the probe window
-        graft.Fits.clearAll() // the probe pays its own capped-bucket memo
+        graft.SessionMemo.clearAll() // the probe pays its own capped-bucket memo
         val t0 = System.nanoTime()
         val s0 = meter.snapshot()
         probe(loc).count()

@@ -6,13 +6,14 @@ package graft
   * plan shapes are intentional, then paste the printed map into the
   * spec. Uses the exact same session config, sf directory, and
   * clear-then-meter procedure as the spec so the numbers are
-  * like-for-like: [[Fits.clearAll]] before each metered run makes the
-  * measurement the query's FULL plan volume (fit builds included) and
-  * independent of whatever ran earlier in the JVM. Each query is
+  * like-for-like: [[SessionMemo.clearAll]] before each metered run makes
+  * the measurement the query's FULL plan volume (fit builds included)
+  * and independent of whatever ran earlier in the JVM. Each query is
   * measured twice and the two volumes must agree — a disagreement means
-  * either a fit [[Fits.clearAll]] doesn't reach (add it there) or a
-  * genuinely nondeterministic shuffle volume (drop the query from the
-  * budget map; do not average).
+  * either a cache that is not a `SessionMemo` (make it one: memos
+  * register themselves, so clearAll reaches them) or a genuinely
+  * nondeterministic shuffle volume (drop the query from the budget map;
+  * do not average).
   */
 object BudgetCalibrate {
   def main(args: Array[String]): Unit = {
@@ -24,7 +25,7 @@ object BudgetCalibrate {
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       def once(): Long = {
-        Fits.clearAll()
+        SessionMemo.clearAll()
         val s0 = meter.snapshot()
         fn(spark, SparkTestSession.sfDir).count()
         meter.snapshot() - s0

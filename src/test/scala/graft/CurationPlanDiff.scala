@@ -3,7 +3,7 @@ package graft
 /** One-off diagnostic for the q_curation_pipeline cold-volume
   * bimodality (941 626 vs 1 618 684 bytes): print the query's executed
   * plan in the two session histories that produce the two volumes —
-  * (a) fresh session, (b) after one q_contamination run + Fits.clearAll
+  * (a) fresh session, (b) after one q_contamination run + SessionMemo.clearAll
   * — and report which exchanges differ. Run with
   * `Test/runMain graft.CurationPlanDiff [sfDir]`.
   */
@@ -22,7 +22,7 @@ object CurationPlanDiff {
 
     val meter = new Bench.ShuffleMeter(spark.sparkContext)
     def volumes(label: String, name: String): Unit = {
-      Fits.clearAll()
+      SessionMemo.clearAll()
       meter.snapshot()
       meter.tag = label
       SparkEntry.queries(name)(spark, sf).count()

@@ -153,7 +153,7 @@ class Round11Spec extends AnyFunSuite {
       f
     }
     val results = Await.result(
-      Future.sequence((1 to 8).map(_ => Future(memo.getOrElsePut("k")(frame())))),
+      Future.sequence((1 to 8).map(_ => Future(memo.getOrElsePut(spark, "k")(frame())))),
       60.seconds)
     // one compute, every caller sees the registered frame, and the
     // cache survives (the old loser-unpersist raced CacheManager's

@@ -12,10 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * instead of merely flagging `shuf_changed` in the next driver
   * artifact.
   *
-  * [[Fits.clearAll]] runs before each metered query so the volume is
-  * the FULL plan volume — fit builds (IVF centroids, bucketed dedup
-  * indexes, gram sets) included — and deterministic regardless of which
-  * suites ran earlier in the forked test JVM.
+  * [[SessionMemo.clearAll]] runs before each metered query so the
+  * volume is the FULL plan volume — fit builds (IVF centroids, bucketed
+  * dedup indexes, gram sets) included — and deterministic regardless of
+  * which suites ran earlier in the forked test JVM. It reaches every
+  * cache because every cache is a `SessionMemo`, and each memo
+  * registers itself when it is constructed.
   *
   * Gate shape mirrors [[Bench.shufDrifted]]: fail only when the ratio
   * passes 1.3x in either direction AND the absolute delta clears a
@@ -73,7 +75,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     PlanLint.silenceBoundedWindowWarning()
     val meter = new Bench.ShuffleMeter(spark.sparkContext)
     def measure(name: String): Long = {
-      Fits.clearAll()
+      SessionMemo.clearAll()
       val s0 = meter.snapshot()
       SparkEntry.queries(name)(spark, SparkTestSession.sfDir).count()
       meter.snapshot() - s0
