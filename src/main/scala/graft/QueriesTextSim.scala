@@ -674,7 +674,7 @@ object QueriesTextSim {
     // on the token itself.
     ("q_vocab_topk", ((s, dir) => {
       val toks = docs(s, dir).select(col("lang"),
-        explode(TextFunctions.wsTokens(TextFunctions.normalize(col("text")))).as("token"))
+        explode(TextFunctions.normTokens(col("text"))).as("token"))
       val counts = toks.groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("lang").orderBy(col("n").desc, col("token").asc)
@@ -699,17 +699,14 @@ object QueriesTextSim {
     // so the booleans are deterministic.
     ("q_cms_tokens", ((s, dir) => {
       val toks = docs(s, dir).select(
-        explode(TextFunctions.wsTokens(TextFunctions.normalize(col("text"))))
-          .as("token"))
+        explode(TextFunctions.normTokens(col("text"))).as("token"))
       val cms = graft.functions.Sketches.cmsFit(toks, col("token"),
         eps = 0.001, confidence = 0.99, seed = 42)
       val slack = math.ceil(cms.totalCount * 0.001).toLong
       // 20 driver-side probes of the collected sketch — the query-set
       // side of a sketch is tiny by definition
       val est = udf((t: String) => cms.estimateCount(t))
-      docs(s, dir).select(
-          explode(TextFunctions.wsTokens(TextFunctions.normalize(col("text"))))
-            .as("token"))
+      docs(s, dir).select(explode(TextFunctions.normTokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("n_exact"))
         .orderBy(col("n_exact").desc, col("token").asc).limit(20)
         .withColumn("_est", est(col("token")))
@@ -927,8 +924,7 @@ object QueriesTextSim {
     // ---- SimHash signatures (portable md5 token hashes) ----------------
     ("q_simhash", ((s, dir) =>
       docs(s, dir).select(col("doc_id"),
-        graft.plans.PortableSimHash(TextFunctions.wsTokens(
-          TextFunctions.normalize(col("text")))).as("sig"))): Q,
+        graft.plans.PortableSimHash(TextFunctions.normTokens(col("text"))).as("sig"))): Q,
       Some(simhashOracle)),
 
     // ---- n-gram Jaccard on adjacent doc pairs (deterministic pairing) --

@@ -41,8 +41,7 @@ object Contamination {
     // staging pattern, load-bearing here (~4x on the contamination
     // queries at sf0.1).
     val staged = df.select(col(idCol).as("doc_id"),
-      TextFunctions.wsTokens(TextFunctions.normalize(col(textCol)))
-        .as("_graft_tk"))
+      TextFunctions.normTokens(col(textCol)).as("_graft_tk"))
     // DistinctWordNgrams = array_distinct(ngramsOf(tk, n)) as one native
     // pass (Round21Spec parity lock) — the interpreted HOF form built a
     // Seq slice + String per output gram and dominated these queries'

@@ -27,13 +27,12 @@ object Dsir {
     * in any engine). The paper's feature space, sized by `buckets`.
     */
   def gramBuckets(text: Column, buckets: Int): Column =
-    gramBucketsFromTokens(
-      TextFunctions.wsTokens(TextFunctions.normalize(text)), buckets)
+    gramBucketsFromTokens(TextFunctions.normTokens(text), buckets)
 
   /** [[gramBuckets]] over an already-tokenized column. `toks` should be
     * an ATTRIBUTE: the bigram lambda reads it per element, and an
-    * inline regexp-split tree gets no CSE under interpreted HOFs — the
-    * one-Column [[gramBuckets]] convenience is O(tokens²) regexp evals
+    * inline tokenizer tree gets no CSE under interpreted HOFs — the
+    * one-Column [[gramBuckets]] convenience is O(tokens²) tokenizer evals
     * per document, this staged form O(tokens).
     */
   def gramBucketsFromTokens(toks: Column, buckets: Int): Column = {
@@ -54,7 +53,7 @@ object Dsir {
   private def docBuckets(df: DataFrame, textCol: String, buckets: Int,
                          idCol: Option[String]): DataFrame = {
     val staged = df.withColumn("_toks",
-      TextFunctions.wsTokens(TextFunctions.normalize(col(textCol))))
+      TextFunctions.normTokens(col(textCol)))
     val b = gramBucketsFromTokens(col("_toks"), buckets)
     idCol match {
       case Some(id) => staged.select(col(id).as("doc_id"),
@@ -131,7 +130,7 @@ object Dsir {
                               textCol: String, targetFilter: Column,
                               buckets: Int = 1024): DataFrame = {
     val staged = corpus.withColumn("_toks",
-      TextFunctions.wsTokens(TextFunctions.normalize(col(textCol))))
+      TextFunctions.normTokens(col(textCol)))
       .withColumn("_b", gramBucketsFromTokens(col("_toks"), buckets))
     val diffArr = fitDiff(corpus, textCol, targetFilter, buckets)
     val diffLit = array(diffArr.map(lit(_)).toSeq: _*)
@@ -159,7 +158,7 @@ object Dsir {
               buckets: Int = 1024): Array[Double] =
     memoFit(corpus, s"$textCol:${filterKey(targetFilter)}:$buckets") {
       val counts = corpus.withColumn("_toks",
-          TextFunctions.wsTokens(TextFunctions.normalize(col(textCol))))
+          TextFunctions.normTokens(col(textCol)))
         .withColumn("_b", gramBucketsFromTokens(col("_toks"), buckets))
         .select(explode(col("_b")).as("bucket"), targetFilter.as("_t"))
         .groupBy(col("bucket"))

@@ -37,7 +37,7 @@ object Dedup {
 
   /** Word k-shingles of the normalized text. */
   def shingles(text: Column, k: Int): Column = {
-    val toks = TextFunctions.wsTokens(TextFunctions.normalize(text))
+    val toks = TextFunctions.normTokens(text)
     when(size(toks) < k, array(array_join(toks, " ")))
       .otherwise(transform(sequence(lit(0), size(toks) - k),
         i => array_join(slice(toks, i + 1, lit(k)), " ")))
@@ -102,7 +102,7 @@ object Dedup {
     // negligible collision probability).
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .withColumn("sh", graft.plans.ShingleHashes(
-        TextFunctions.wsTokens(TextFunctions.normalize(col("text"))), k))
+        TextFunctions.normTokens(col("text")), k))
       .withColumn("sig", graft.plans.MinHashSignature(col("sh"), numHashes))
       .drop("text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -191,7 +191,7 @@ object Dedup {
     cachePersisted(df.sparkSession, portableBaseKey(df, idCol, textCol, k, numHashes),
       df.select(col(idCol).as("id"), col(textCol).as("text"))
         .withColumn("sh", graft.plans.PortableShingles(
-          TextFunctions.wsTokens(TextFunctions.normalize(col("text"))), k))
+          TextFunctions.normTokens(col("text")), k))
         .withColumn("sig", graft.plans.PortableMinHashSig(col("sh"), numHashes))
         .drop("text"))
 
@@ -209,17 +209,11 @@ object Dedup {
     * signature arrays.
     */
   private def portableBandedOf(base: DataFrame, numHashes: Int,
-                               bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    def bandHash(b: Int): Column =
-      (1 until rowsPerBand).foldLeft(element_at(col("sig"), b * rowsPerBand + 1)) {
-        (acc, j) => portableRot(acc).bitwiseXOR(element_at(col("sig"), b * rowsPerBand + j + 1))
-      }
+                               bands: Int): DataFrame =
     base
-      .select(col("id"), explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"), bandHash(b).as("bh"))): _*)).as("bb"))
+      .select(col("id"),
+        explode(graft.plans.PortableBands(col("sig"), bands, numHashes / bands)).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
 
   /** The LSH buckets the portable minhash pipeline would DROP at
     * `maxBucket` — (band, bh, n_ids), one row per oversized bucket.
@@ -432,22 +426,14 @@ object Dedup {
     */
   private[graft] def portableBandedProjection(df: DataFrame,
                                               textCol: String, k: Int,
-                                              numHashes: Int, bands: Int): DataFrame = {
-    val base = df
+                                              numHashes: Int, bands: Int): DataFrame =
+    df
       .withColumn("sh", graft.plans.PortableShingles(
-        TextFunctions.wsTokens(TextFunctions.normalize(col(textCol))), k))
+        TextFunctions.normTokens(col(textCol)), k))
       .withColumn("sig", graft.plans.PortableMinHashSig(col("sh"), numHashes))
-    val rowsPerBand = numHashes / bands
-    def bandHash(b: Int): Column =
-      (1 until rowsPerBand).foldLeft(element_at(col("sig"), b * rowsPerBand + 1)) {
-        (acc, j) => portableRot(acc).bitwiseXOR(element_at(col("sig"), b * rowsPerBand + j + 1))
-      }
-    base
-      .withColumn("bb", explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"), bandHash(b).as("bh"))): _*)))
+      .withColumn("bb", explode(graft.plans.PortableBands(col("sig"), bands, numHashes / bands)))
       .withColumn("band", col("bb.band")).withColumn("bh", col("bb.bh"))
       .drop("bb", "sig")
-  }
 
   /** The corpus side of an incremental search, aggregated to capped
     * (band, bh, base_ids) buckets and MEMOIZED persisted under
@@ -535,7 +521,7 @@ object Dedup {
     val banded = xxhashBandedOf(
       df.select(col(idCol).as("id"),
         graft.plans.MinHashSignature(graft.plans.ShingleHashes(
-          TextFunctions.wsTokens(TextFunctions.normalize(col(textCol))), k),
+          TextFunctions.normTokens(col(textCol)), k),
           numHashes).as("sig")),
       bands, numHashes / bands)
     oversizedBuckets(banded, Seq("band", "bh"), maxBucket)
@@ -568,13 +554,6 @@ object Dedup {
       portableBaseCache.evictPrefix(d.sparkSession, SessionMemo.planKey(d) + ":")
     case None => portableBaseCache.clear()
   }
-
-  /** 59-bit rotate-left-by-7 via mask-then-shift (no overflow anywhere;
-    * DuckDB mirror: ((x & 2^52-1) << 7) | (x >> 52)).
-    */
-  private def portableRot(x: Column): Column =
-    shiftleft(x.bitwiseAND(lit((1L << 52) - 1)), 7)
-      .bitwiseOR(shiftrightunsigned(x, 52))
 
   /** Group rows into (keys → id array) buckets, keeping only buckets of
     * size in [2, maxBucket] — WITHOUT ever materializing an oversized
@@ -670,13 +649,13 @@ object Dedup {
     // array per candidate pair; 5-10× on the verify stages' task time
     graft.plans.JaccardSim(a, b)
 
-  /** n-gram (character shingle) Jaccard between two text columns. */
+  /** n-gram (character shingle) Jaccard between two text columns: the
+    * distinct character n-grams of each normalized text, one native pass
+    * each ([[graft.plans.DistinctCharNgrams]]; an interpreted lambda per
+    * character position cost milliseconds a pair).
+    */
   def ngramJaccard(textA: Column, textB: Column, n: Int = 3): Column = {
-    def grams(t: Column) = {
-      val norm = TextFunctions.normalize(t)
-      array_distinct(transform(sequence(lit(0), greatest(length(norm) - n, lit(0))),
-        i => norm.substr(i + 1, lit(n))))
-    }
+    def grams(t: Column) = graft.plans.DistinctCharNgrams(TextFunctions.normalize(t), n)
     jaccard(grams(textA), grams(textB))
   }
 
@@ -685,7 +664,7 @@ object Dedup {
     * Pure expression: 64 bit-counters via transform over bit positions.
     */
   def simhash(text: Column): Column = {
-    val toks = TextFunctions.wsTokens(TextFunctions.normalize(text))
+    val toks = TextFunctions.normTokens(text)
     val hashes = transform(toks, t => xxhash64(t))
     val bitCols = (0 until 64).map { b =>
       val vote = aggregate(hashes, lit(0L),

@@ -4,8 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -220,4 +222,83 @@ case class PortableSimHash(child: Expression)
 object PortableSimHash {
   def apply(tokens: Column): Column =
     GraftSqlBridge.column(PortableSimHash(GraftSqlBridge.expression(tokens)))
+}
+
+/** array<long> portable minhash signature → the LSH band keys:
+  * `bands` structs (band, bh), where bh folds the band's `rowsPerBand`
+  * signature values left to right as acc' = rot7(acc) XOR sig(i) with
+  * rot7(x) = ((x & 2^52−1) << 7) | (x >>> 52), so it stays a 59-bit
+  * value with no overflow in any engine. Mirrors the Column fold it
+  * replaces (`element_at` per value): a NULL signature, or a null
+  * element in a band, gives that band a null bh. A signature shorter
+  * than bands × rowsPerBand is an error, as `element_at` out of range
+  * is under ANSI.
+  *
+  * Why: the Column fold builds bands × rowsPerBand element_at/shift/xor
+  * nodes under one explode, which generated 22 KB stage methods that
+  * HotSpot never compiles; this is one static call.
+  */
+case class PortableBands(child: Expression, bands: Int, rowsPerBand: Int)
+    extends UnaryExpression {
+  require(bands > 0 && rowsPerBand > 0,
+    s"PortableBands: bands and rowsPerBand must be positive, got $bands, $rowsPerBand")
+
+  override def dataType: DataType = PortableBands.dataType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    PortableBands.bandsOf(child.eval(input).asInstanceOf[ArrayData], bands, rowsPerBand)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = graft.plans.PortableBands.bandsOf(
+      |  ${c.isNull} ? null : ${c.value}, $bands, $rowsPerBand);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PortableBands =
+    copy(child = newChild)
+}
+
+object PortableBands {
+  val dataType: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bh", LongType, nullable = true))), containsNull = false)
+
+  private val Mask52 = (1L << 52) - 1
+
+  /** Shared by eval and generated code. */
+  def bandsOf(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    if (sig != null && sig.numElements() < bands * rowsPerBand)
+      throw new IllegalArgumentException(s"PortableBands: signature has " +
+        s"${sig.numElements()} values, needs ${bands * rowsPerBand}")
+    val out = new Array[Any](bands)
+    var b = 0
+    while (b < bands) {
+      var bh: java.lang.Long = null
+      if (sig != null) {
+        var acc = 0L
+        var isNull = false
+        var j = 0
+        while (j < rowsPerBand && !isNull) {
+          val i = b * rowsPerBand + j
+          if (sig.isNullAt(i)) isNull = true
+          else {
+            val v = sig.getLong(i)
+            acc = if (j == 0) v else (((acc & Mask52) << 7) | (acc >>> 52)) ^ v
+          }
+          j += 1
+        }
+        if (!isNull) bh = acc
+      }
+      out(b) = InternalRow(b, bh)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    GraftSqlBridge.column(PortableBands(GraftSqlBridge.expression(sig), bands, rowsPerBand))
 }

@@ -4,10 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import com.ibm.icu.lang.UCharacter
 
 /** Text-pipeline kernels (optimization round 21): tight single-pass
   * replacements for interpreted higher-order-function / regex chains on
@@ -30,7 +33,209 @@ import org.apache.spark.unsafe.types.UTF8String
   * Kernels on LEAN stages (JaccardSim in join conditions, RoundMantissa
   * join keys, DotProduct/NearestCentroid) keep real codegen — there the
   * stage method stays small and WSCG wins.
+  *
+  * The normalized-text kernels ([[NormalizeText]], [[NormTokens]]) keep
+  * real codegen too: each generates one static call, so the projection
+  * that tokenizes stays small. They and [[AsciiSqueeze]] lowercase
+  * through [[NormText.lower]], which calls the primitives Catalyst's
+  * `Lower` calls for UTF8_BINARY text but never loads
+  * `CollationAwareUTF8String`, whose static initializer title-cases
+  * every code point (about 1.5 s, once per JVM, on a task thread).
   */
+
+/** The case mapping and whitespace rules shared by the normalized-text
+  * kernels. Whitespace is Java regex `\s` without flags: space, `\t`,
+  * `\n`, `\x0B`, `\f` and `\r`, all ASCII, and no lowercase mapping
+  * creates or removes one, so collapsing runs after lowering equals the
+  * regex over the lowered string.
+  */
+object NormText {
+
+  /** `lower(s)` for UTF8_BINARY text. With
+    * `spark.sql.icu.caseMappings.enabled` (`useICU`) Catalyst lowers
+    * through `CollationAwareUTF8String.toLowerCase`: the ASCII map for
+    * all-ASCII text, else ICU's `UCharacter.toLowerCase` over the valid
+    * string. Without it, `UTF8String.toLowerCase`. Same calls here, minus
+    * the class whose initializer builds a title-case table.
+    */
+  def lower(s: UTF8String, useICU: Boolean): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else if (useICU) UTF8String.fromString(UCharacter.toLowerCase(s.toValidString))
+    else s.toLowerCase
+
+  /** `regexp_replace(lower(trim(s)), "\\s+", " ")`: `UTF8String.trim`
+    * (spaces only, as Catalyst's `trim`), [[lower]], then one pass that
+    * writes each whitespace run as one space.
+    */
+  def normalize(s: UTF8String, useICU: Boolean): UTF8String = {
+    val b = lower(s.trim(), useICU).getBytes
+    val out = new Array[Byte](b.length)
+    var o = 0
+    var inSpace = false
+    var i = 0
+    while (i < b.length) {
+      val c = b(i)
+      if (c == ' ' || (c >= 9 && c <= 13)) {
+        if (!inSpace) { out(o) = ' '; o += 1; inSpace = true }
+      } else {
+        out(o) = c
+        o += 1
+        inSpace = false
+      }
+      i += 1
+    }
+    UTF8String.fromBytes(out, 0, o)
+  }
+
+  /** `split(trim(normalize(s)), "\\s+")`: the space-separated runs of
+    * the normalized text, or `[""]` when it has none.
+    */
+  def tokens(s: UTF8String, useICU: Boolean): ArrayData = {
+    val n = normalize(s, useICU)
+    // normalize returns a view of a fresh byte[] (fromBytes(out, 0, o))
+    val b = n.getBaseObject.asInstanceOf[Array[Byte]]
+    val end = n.numBytes
+    var count = 0
+    var i = 0
+    while (i < end) {
+      if (b(i) != ' ' && (i == 0 || b(i - 1) == ' ')) count += 1
+      i += 1
+    }
+    if (count == 0) return new GenericArrayData(Array[Any](UTF8String.EMPTY_UTF8))
+    val out = new Array[Any](count)
+    var k = 0
+    i = 0
+    while (i < end) {
+      if (b(i) == ' ') i += 1
+      else {
+        val start = i
+        while (i < end && b(i) != ' ') i += 1
+        out(k) = UTF8String.fromBytes(b, start, i - start)
+        k += 1
+      }
+    }
+    new GenericArrayData(out)
+  }
+}
+
+/** `spark.sql.icu.caseMappings.enabled`, read the way Catalyst's `Lower`
+  * reads it: a lazy val of the expression, taken from the active conf on
+  * first use (at code generation, or on the task that evaluates it).
+  */
+trait IcuCaseMapped { self: Expression =>
+  lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+}
+
+/** text → `regexp_replace(lower(trim(text)), "\\s+", " ")` natively
+  * ([[NormText.normalize]]); null gives null. The normalized form under
+  * fingerprints, exact dedup and every tokenizer of the text path.
+  * Why: the chain's `lower()` initializes `CollationAwareUTF8String`
+  * (ICU case mappings are on by default), and its regex re-scans the
+  * string; here the whitespace runs collapse in one byte pass.
+  */
+case class NormalizeText(child: Expression)
+    extends UnaryExpression with IcuCaseMapped {
+
+  override def dataType: DataType = StringType
+
+  override def nullSafeEval(input: Any): Any =
+    NormText.normalize(input.asInstanceOf[UTF8String], useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.NormText.normalize($c, $useICU)")
+
+  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
+    copy(child = newChild)
+}
+
+object NormalizeText {
+  def apply(text: Column): Column =
+    GraftSqlBridge.column(NormalizeText(GraftSqlBridge.expression(text)))
+}
+
+/** text → `split(trim(<NormalizeText>), "\\s+")` in one pass
+  * ([[NormText.tokens]]): the normalized tokens, `[""]` for empty or
+  * whitespace-only text, null for null. Same element type as Spark's
+  * `split` (containsNull = false). Why: see [[NormalizeText]]; the split
+  * was a third regex pass.
+  */
+case class NormTokens(child: Expression)
+    extends UnaryExpression with IcuCaseMapped {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    NormText.tokens(input.asInstanceOf[UTF8String], useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.NormText.tokens($c, $useICU)")
+
+  override protected def withNewChildInternal(newChild: Expression): NormTokens =
+    copy(child = newChild)
+}
+
+object NormTokens {
+  def apply(text: Column): Column =
+    GraftSqlBridge.column(NormTokens(GraftSqlBridge.expression(text)))
+}
+
+/** text → its DISTINCT character n-grams, first-occurrence order —
+  * mirrors `array_distinct(transform(sequence(0, greatest(length(t) − n,
+  * 0)), i => substr(t, i + 1, n)))`:
+  *  - characters are code points, stepped like `UTF8String.substring`
+  *    (a surrogate pair is one character);
+  *  - text of at most n characters, the empty string included, is its
+  *    own single gram;
+  *  - NULL text → [null] (greatest skips the null length, and substr of
+  *    null is a null element), so the array itself is never null.
+  * Why: the formula ran an interpreted lambda and a Substring eval per
+  * character position; this slices the bytes once.
+  */
+case class DistinctCharNgrams(child: Expression, n: Int)
+    extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"DistinctCharNgrams: n must be positive, got $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullable: Boolean = false
+
+  def grams(s: UTF8String): ArrayData = {
+    if (s == null) return new GenericArrayData(Array[Any](null))
+    val b = s.getBytes
+    // starts(c) = byte offset of character c; starts(len) = end
+    val starts = new Array[Int](b.length + 1)
+    var len = 0
+    var i = 0
+    while (i < b.length) {
+      starts(len) = i
+      len += 1
+      i += UTF8String.numBytesForFirstByte(b(i))
+    }
+    starts(len) = math.min(i, b.length)
+    if (len <= n) return new GenericArrayData(Array[Any](UTF8String.fromBytes(b)))
+    val seen = new java.util.LinkedHashSet[UTF8String](2 * (len - n + 1))
+    var c = 0
+    while (c + n <= len) {
+      seen.add(UTF8String.fromBytes(b, starts(c), starts(c + n) - starts(c)))
+      c += 1
+    }
+    val out = new Array[Any](seen.size)
+    val it = seen.iterator()
+    c = 0
+    while (it.hasNext) { out(c) = it.next(); c += 1 }
+    new GenericArrayData(out)
+  }
+
+  override def eval(input: InternalRow): Any =
+    grams(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def withNewChildInternal(newChild: Expression): DistinctCharNgrams =
+    copy(child = newChild)
+}
+
+object DistinctCharNgrams {
+  def apply(text: Column, n: Int): Column =
+    GraftSqlBridge.column(DistinctCharNgrams(GraftSqlBridge.expression(text), n))
+}
 
 /** array<string> tokens → DISTINCT word n-grams, first-occurrence
   * order — mirrors `array_distinct(TextFunctions.ngramsOf(toks, n))`:
@@ -90,12 +295,12 @@ object DistinctWordNgrams {
     GraftSqlBridge.column(DistinctWordNgrams(GraftSqlBridge.expression(tokens), n))
 }
 
-/** LOWERCASE string → alnum runs joined by single spaces — mirrors
-  * `trim(regexp_replace(regexp_replace(<lower input>, "[^a-z0-9]", " "),
-  * " +", " "))` in one byte pass. The caller supplies the lowercased
-  * input (Spark's own codegen'd Lower — case mapping is
-  * collation/ICU-sensitive and NOT re-implemented here); this kernel
-  * only replaces the two regex passes + trim.
+/** text → lowercase alnum runs joined by single spaces — mirrors
+  * `trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9]", " "),
+  * " +", " "))`: lowered by [[NormText.lower]] (the case-mapping calls
+  * of Catalyst's `Lower`, with the same ICU setting, without its
+  * `CollationAwareUTF8String` class init), then squeezed in one byte
+  * pass.
   *
   * Byte-level equivalence: in UTF-8 no byte of a multi-byte sequence is
   * ASCII, so [a-z0-9] BYTE runs equal the regex's [a-z0-9] CHAR runs;
@@ -104,13 +309,13 @@ object DistinctWordNgrams {
   * runs joined by single spaces".
   */
 case class AsciiSqueeze(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with IcuCaseMapped with CodegenFallback {
 
   override def dataType: DataType = StringType
 
   /** Kernel shared by eval and generated code. */
   def squeeze(s: UTF8String): UTF8String = {
-    val bytes = s.getBytes
+    val bytes = NormText.lower(s, useICU).getBytes
     val out = new Array[Byte](bytes.length)
     var o = 0
     var pendingSpace = false
@@ -136,8 +341,8 @@ case class AsciiSqueeze(child: Expression)
 }
 
 object AsciiSqueeze {
-  def apply(lowered: Column): Column =
-    GraftSqlBridge.column(AsciiSqueeze(GraftSqlBridge.expression(lowered)))
+  def apply(text: Column): Column =
+    GraftSqlBridge.column(AsciiSqueeze(GraftSqlBridge.expression(text)))
 }
 
 /** array<string> tokens → Σ length(token) as long — mirrors

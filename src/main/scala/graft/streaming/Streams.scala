@@ -130,8 +130,7 @@ object Streams {
     val rowsPerBand = numHashes / bands
     val sig = graft.plans.MinHashSignature(
       graft.plans.ShingleHashes(
-        graft.text.TextFunctions.wsTokens(
-          graft.text.TextFunctions.normalize(col(textCol))), k), numHashes)
+        graft.text.TextFunctions.normTokens(col(textCol)), k), numHashes)
     val banded = docs
       .select(col(idCol).as("doc_id"), col(tsCol).as("ts"),
         explode(graft.dedup.Dedup.lshBands(sig, bands, rowsPerBand)).as("b"))
@@ -447,8 +446,7 @@ object Streams {
                       out: String = "logw"): DataFrame = {
     val buckets = diff.length
     val staged = docs.withColumn("_graft_toks",
-      graft.text.TextFunctions.wsTokens(
-        graft.text.TextFunctions.normalize(col(textCol))))
+      graft.text.TextFunctions.normTokens(col(textCol)))
       .withColumn("_graft_b",
         graft.curate.Dsir.gramBucketsFromTokens(col("_graft_toks"), buckets))
     val diffLit = array(diff.map(lit(_)).toSeq: _*)

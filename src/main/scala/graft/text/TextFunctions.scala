@@ -26,10 +26,25 @@ object TextFunctions {
     graft.plans.BpeishCount(text)
 
   /** Normalized text: lowercase, collapse whitespace — the canonical
-    * form used by fingerprints and exact dedup.
+    * form used by fingerprints and exact dedup. Equal to
+    * `regexp_replace(lower(trim(text)), "\\s+", " ")`, computed natively
+    * ([[graft.plans.NormalizeText]], NormTextSpec parity lock under both
+    * ICU case-mapping settings). Why not the chain: Spark's
+    * `lower()` with `spark.sql.icu.caseMappings.enabled` (the default)
+    * initializes `CollationAwareUTF8String`, whose static initializer
+    * title-cases every code point, about 1.5 s of one task's CPU once
+    * per JVM; the regex then re-scans the lowered string.
     */
-  def normalize(text: Column): Column =
-    regexp_replace(lower(trim(text)), "\\s+", " ")
+  def normalize(text: Column): Column = graft.plans.NormalizeText(text)
+
+  /** Whitespace tokens of the normalized text, `wsTokens(normalize(text))`
+    * as one native pass ([[graft.plans.NormTokens]]): `[""]` for empty or
+    * whitespace-only text, null for null. The tokenizer of every
+    * dedup, contamination, DSIR and repetition operator. Why: the same
+    * ICU class initialization as [[normalize]], plus the split's own
+    * regex pass.
+    */
+  def normTokens(text: Column): Column = graft.plans.NormTokens(text)
 
   /** Aggressive ASCII canonicalization: lowercase, strip everything
     * outside [a-z0-9] to spaces, collapse runs. Catches near-dups that
@@ -39,10 +54,11 @@ object TextFunctions {
     * decision is identical across engines.
     */
   def canonicalize(text: Column): Column =
-    // AsciiSqueeze = the two regex passes + trim in one byte pass over
-    // Spark's own lower() (Round21Spec parity lock); case mapping stays
-    // Catalyst's — only the ASCII squeeze is hand-rolled
-    graft.plans.AsciiSqueeze(lower(text))
+    // AsciiSqueeze = lower() + the two regex passes + trim in one byte
+    // pass (Round21Spec parity lock); it lowercases through
+    // NormText.lower, Catalyst's own case-mapping calls without the
+    // CollationAwareUTF8String class init (see normalize)
+    graft.plans.AsciiSqueeze(text)
 
   /** [[canonicalize]] with a Unicode NFKC pre-pass: composes combining
     * marks AND folds width/ligature compatibility variants before the
@@ -133,14 +149,14 @@ object TextFunctions {
     *    first of each distinct n-gram (n = `n`).
     */
   def repetitionFeatures(text: Column, n: Int = 2): Column =
-    repetitionFeaturesTok(wsTokens(normalize(text)), ngramsOf(wsTokens(normalize(text)), n))
+    repetitionFeaturesTok(normTokens(text), ngramsOf(normTokens(text), n))
 
   /** Word n-grams of a token array. `sequence(0, k)` with k < 0
     * generates a DESCENDING range — the short-doc case is guarded
     * explicitly.
     *
     * PERFORMANCE: pass a MATERIALIZED token column (stage
-    * `wsTokens(normalize(text))` in its own projection first), not the
+    * `normTokens(text)` in its own projection first), not the
     * tokenizer expression itself — the lambda references `toks` once
     * per output gram and interpreted HOFs get no codegen CSE, so an
     * inlined tokenizer re-splits the document O(tokens) times
@@ -184,7 +200,7 @@ object TextFunctions {
     // over the staged tokens — the HOF form ran 2× array_distinct + 2×
     // aggregate + the n-gram transform interpreted per row (Round22Spec
     // parity lock against the formula, nulls/unicode included)
-    df.withColumn("_graft_tk", wsTokens(normalize(col(textCol))))
+    df.withColumn("_graft_tk", normTokens(col(textCol)))
       .withColumn(out, graft.plans.RepetitionStats(col("_graft_tk"), n))
       .drop("_graft_tk")
 
@@ -212,7 +228,7 @@ object TextFunctions {
                    minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                    maxSymbolRatio: Double = 0.1, minAlphaRatio: Double = 0.8,
                    minStopwords: Int = 2): Column = {
-    val toks = wsTokens(normalize(text))
+    val toks = normTokens(text)
     gopherFilterTok(toks, text, minTokens, maxTokens, minMeanLen, maxMeanLen,
       maxSymbolRatio, minAlphaRatio, minStopwords)
   }
@@ -277,7 +293,7 @@ object TextFunctions {
                        maxSymbolRatio: Double = 0.1, minAlphaRatio: Double = 0.8,
                        minStopwords: Int = 2,
                        out: String = "f"): org.apache.spark.sql.DataFrame =
-    df.withColumn("_graft_tk", wsTokens(normalize(col(textCol))))
+    df.withColumn("_graft_tk", normTokens(col(textCol)))
       .withColumn(out, gopherFilterTok(col("_graft_tk"), col(textCol),
         minTokens, maxTokens, minMeanLen, maxMeanLen, maxSymbolRatio,
         minAlphaRatio, minStopwords))
@@ -298,7 +314,7 @@ object TextFunctions {
   def tokenEntropy(df: org.apache.spark.sql.DataFrame, idCol: String,
                    textCol: String): org.apache.spark.sql.DataFrame = {
     val toks = df.select(col(idCol),
-      explode(wsTokens(normalize(col(textCol)))).as("_graft_tok"))
+      explode(normTokens(col(textCol))).as("_graft_tok"))
     val counts = toks.groupBy(col(idCol), col("_graft_tok"))
       .agg(count(lit(1)).as("_graft_c"))
     counts.groupBy(col(idCol))

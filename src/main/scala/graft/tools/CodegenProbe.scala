@@ -22,18 +22,26 @@ object CodegenProbe {
     val toks = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "a b a b a b"), (3L, null.asInstanceOf[String]))
       .toDF("id", "text")
-      .withColumn("tk", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("tk", graft.plans.NormTokens(col("text")))
 
     def probe(name: String)(body: => Unit): Unit =
       try { body; println(s"OK   $name") }
       catch { case e: Throwable =>
         println(s"FAIL $name: ${e.getClass.getSimpleName} ${e.getMessage.take(300)}") }
 
+    probe("NormalizeText") {
+      toks.select(graft.plans.NormalizeText(col("text")).as("n")).write.format("noop").mode("overwrite").save()
+    }
+    probe("PortableBands") {
+      toks.select(explode(graft.plans.PortableBands(graft.plans.PortableMinHashSig(
+        graft.plans.PortableShingles(col("tk"), 3), 8), 4, 2)).as("b"))
+        .write.format("noop").mode("overwrite").save()
+    }
     probe("DistinctWordNgrams") {
       toks.select(graft.plans.DistinctWordNgrams(col("tk"), 3).as("g")).write.format("noop").mode("overwrite").save()
     }
     probe("AsciiSqueeze") {
-      toks.select(graft.plans.AsciiSqueeze(lower(col("text"))).as("c")).write.format("noop").mode("overwrite").save()
+      toks.select(graft.plans.AsciiSqueeze(col("text")).as("c")).write.format("noop").mode("overwrite").save()
     }
     probe("SumTokenLengths") {
       toks.select(graft.plans.SumTokenLengths(col("tk")).as("s")).write.format("noop").mode("overwrite").save()
