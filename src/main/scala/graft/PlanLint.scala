@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -20,6 +21,14 @@ import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, LocalL
   *    post-aggregation partials frames (≤ effective-buckets rows), which
   *    is exactly the boundedness this linter whitelists; it also explains
   *    the benign `WindowExec: No Partition Defined` warnings in bench logs.
+  *    Those partials are gathered into one task by `coalesce(1)` when
+  *    they are small (`GlobalOrdered.partialsOf`); a CoalesceExec over
+  *    an aggregate is as bounded as the aggregate;
+  *  - a SUFFIX frame — `rowsBetween(k, unboundedFollowing)` (or its
+  *    range form) with k ≠ unboundedPreceding — over unbounded input,
+  *    partitioned or not: Spark re-evaluates such a frame for every row,
+  *    which is quadratic in the window partition's rows. The streaming
+  *    form is the prefix frame over the mirrored order.
   *
   * The linter walks `queryExecution.sparkPlan` (post-planning, pre-AQE —
   * AQE only ever *improves* these shapes at runtime, never introduces
@@ -68,6 +77,15 @@ object PlanLint {
     case other => other.children.forall(bounded)
   }
 
+  /** A frame running to the partition's end from anywhere but its start:
+    * Spark's UnboundedFollowingWindowFunctionFrame re-aggregates it for
+    * every row.
+    */
+  private def suffixFrame(e: Expression): Boolean = e.exists {
+    case SpecifiedWindowFrame(_, lower, UnboundedFollowing) => lower != UnboundedPreceding
+    case _ => false
+  }
+
   private def globalPartition(partitionSpec: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Boolean =
     partitionSpec.forall(_.foldable) // empty, or constants like lit(0)
 
@@ -95,6 +113,8 @@ object PlanLint {
         out += Violation(query, "global-window-over-unbounded", w.simpleStringWithNodeId())
       case w: WindowGroupLimitExec if globalPartition(w.partitionSpec) && !bounded(w.child) =>
         out += Violation(query, "global-window-limit-over-unbounded", w.simpleStringWithNodeId())
+      case w: WindowExec if w.windowExpression.exists(suffixFrame) && !bounded(w.child) =>
+        out += Violation(query, "suffix-frame-over-unbounded", w.simpleStringWithNodeId())
       case _ =>
     }
     // Subquery plans (scalar subqueries etc.) get the same scrutiny.

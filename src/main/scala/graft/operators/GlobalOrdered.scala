@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-safe GLOBAL ordered operators — the `by = Nil` tier of the
   * window family (SURVEY.md §2.5; reference src/forder.c's parallel
@@ -21,13 +22,18 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
   *     Equal keys always share a bucket, so tie blocks never split.
   *  2. '''Per-bucket pass''': the ordinary partitioned window runs
   *     inside each bucket (parallel, streaming frame).
-  *  3. '''Prefix offsets''': per-bucket partial aggregates (map-side
-  *     combined — only ≤`buckets` rows shuffle) are combined across
-  *     strictly-prior buckets with a prefix window over the TINY
-  *     partials frame (constant-partitioned, ≤[[MAX_BUCKETS]] rows —
-  *     never a full-data single-partition WindowExec; the former
-  *     all-pairs broadcast self-joins materialized O(buckets²) rows)
-  *     and broadcast-joined back.
+  *  3. '''Prefix offsets''': per-bucket partial aggregates are
+  *     combined across strictly-prior buckets with a prefix window over
+  *     the TINY partials frame (≤ buckets rows — never a full-data
+  *     single-partition WindowExec; the former all-pairs broadcast
+  *     self-joins materialized O(buckets²) rows) and broadcast-joined
+  *     back. The map-side combine emits up to `buckets` rows PER INPUT
+  *     SPLIT, so up to splits × buckets rows shuffle. When that estimate
+  *     fits one advisory partition ([[partialsOf]]) the final aggregate
+  *     is gathered into one task, and it and every partials window run
+  *     in the broadcast job's own stage; above it the final aggregate
+  *     stays hash-distributed and the windows plan their own
+  *     single-partition exchange over the ≤ buckets aggregated rows.
   *
   * Ops that need neighboring ROWS rather than prefix aggregates
   * (shift, fixed-window froll) use '''phantom boundary rows''': the
@@ -344,7 +350,12 @@ object GlobalOrdered {
     * skew reroute).
     */
   private case class Prepped(b: DataFrame, ords: Seq[Column],
-                             fit: Option[(Array[Any], Int)] = None)
+                             fit: Option[(Array[Any], Int)] = None) {
+    /** The fit's bucket count; a caller-supplied bucket expression
+      * ([[cumsumWith]]) is taken at the default ceiling.
+      */
+    def buckets: Int = fit.fold(MAX_BUCKETS)(_._2)
+  }
 
   /** Resolve the bucket/partition count: callers pass 0 (the default)
     * to track `spark.sql.shuffle.partitions` — a hardcoded constant
@@ -443,20 +454,50 @@ object GlobalOrdered {
                                     tieAgnostic: Boolean): DataFrame =
     prep(df, key, asc, buckets, tieAgnostic = tieAgnostic).b
 
-  /** The prefix/suffix window over the TINY partials frame (≤effBuckets
-    * ≤ caller-bounded rows): partitioned by a constant so Catalyst
+  /** Per-bucket partials of `b`: `aggs` grouped by the bucket column,
+    * which comes out as `_b`. The map-side partial aggregate emits up
+    * to `buckets` rows per input split, so the final aggregate reads up
+    * to splits × buckets rows. When that estimate (splits = the larger
+    * of `spark.sql.shuffle.partitions` and b's estimated size over
+    * `spark.sql.files.maxPartitionBytes`) fits in
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` — the size at
+    * which AQE coalesces the final aggregate into one reducer anyway —
+    * the result is gathered with `coalesce(1)`: CoalesceExec(1) reports
+    * SinglePartition, so the final aggregate and every partials window
+    * over it run in one task of the broadcast job, with no exchange
+    * between them. Above it the final aggregate stays hash-distributed
+    * and each window plans its own single-partition exchange.
+    */
+  private def partialsOf(b: DataFrame, buckets: Int, aggs: Column*): DataFrame = {
+    val partials = b.groupBy(col(BKT).as("_b")).agg(aggs.head, aggs.tail: _*)
+    val conf = b.sparkSession.sessionState.conf
+    val splits = BigInt(conf.numShufflePartitions).max(
+      (b.queryExecution.optimizedPlan.stats.sizeInBytes +
+        conf.filesMaxPartitionBytes - 1) / conf.filesMaxPartitionBytes)
+    // 8 bytes of row header over the schema's default field sizes
+    val rowBytes = 8L + partials.schema.defaultSize
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (splits * buckets * rowBytes <= advisory) partials.coalesce(1)
+    else partials
+  }
+
+  /** The prefix/suffix window over the TINY partials frame (≤ buckets
+    * rows, see [[partialsOf]]): partitioned by a constant so Catalyst
     * plans an ordinary (single-group) WindowExec over a provably
     * bounded frame — NOT a partitionless window over the data, which
-    * the plan-shape specs forbid. This replaces the former all-pairs
-    * broadcast self-join, which materialized O(buckets²) join rows.
+    * the plan-shape specs forbid. Over gathered partials it runs in the
+    * aggregate's own task. This replaces the former all-pairs broadcast
+    * self-join, which materialized O(buckets²) join rows.
     */
   private def partialsWindow =
     Window.partitionBy(lit(0)).orderBy(col("_b"))
 
-  /** Aggregates of `partials` over STRICTLY-PRIOR buckets, one row per
-    * bucket (first bucket gets nulls — the empty prefix frame). Each
-    * agg is an aggregate function over a partials column, paired with
-    * its output name.
+  /** Aggregates of `partials` ([[partialsOf]]) over STRICTLY-PRIOR
+    * buckets, one row per bucket (first bucket gets nulls — the empty
+    * prefix frame). Each agg is an aggregate function over a partials
+    * column, paired with its output name. Over gathered partials the
+    * window runs in the final aggregate's task; over distributed ones
+    * it adds one single-partition exchange of ≤ buckets rows.
     */
   private def priorsOf(partials: DataFrame, aggs: (Column, String)*): DataFrame =
     partials.select(
@@ -628,8 +669,8 @@ object GlobalOrdered {
     val wc = bucketWindow(p.ords).rowsBetween(Window.unboundedPreceding, 0)
     val parts = carries.flatMap(_._2.partials) ++ Seq(
       ("_pnn", count(x), sum(_: Column)), ("_pn", count(lit(1)), sum(_: Column)))
-    val aggs = parts.map { case (n, a, _) => a.as(n) }
-    val partials = p.b.groupBy(col(BKT).as("_b")).agg(aggs.head, aggs.tail: _*)
+    val partials = partialsOf(p.b, p.buckets,
+      parts.map { case (n, a, _) => a.as(n) }: _*)
     val j = joinPriors(p.b,
       priorsOf(partials, parts.map { case (n, _, c) => c(col(n)) -> n }: _*))
     val nnPfx = coalesce(col("_pnn"), lit(0L)) + count(x).over(wc)
@@ -691,7 +732,7 @@ object GlobalOrdered {
       more.map { case (c, d) => ordOf(c, !d, nullsFirst) }
     val tieVals = value +: more.map(_._1)
     val w = bucketWindow(ords)
-    val partials = b.groupBy(col(BKT).as("_b")).agg(
+    val partials = partialsOf(b, p.buckets,
       count(lit(1)).as("_pn"),
       // distinct RANKED TUPLES per bucket: the single-column form counts
       // nulls via the max-when adjust (countDistinct skips them); the
@@ -767,8 +808,8 @@ object GlobalOrdered {
     val firstLast = cols.flatMap(c => Seq(
       (if (asc) min_by(col(c), kOrd) else max_by(col(c), kOrd)).as(s"_f_$c"),
       (if (asc) max_by(col(c), kOrd) else min_by(col(c), kOrd)).as(s"_l_$c")))
-    val partials = within.groupBy(col(BKT).as("_b"))
-      .agg(max(col("_graft_rid")).as("_runs"), firstLast: _*)
+    val partials = partialsOf(within, p.buckets,
+      max(col("_graft_rid")).as("_runs") +: firstLast: _*)
     // previous NONEMPTY bucket's last values per bucket: partials only
     // has nonempty buckets, so lag over the tiny partials window IS the
     // prev-nonempty lookup (no all-pairs self-join). A null lag of _b
@@ -813,8 +854,8 @@ object GlobalOrdered {
     * the carry is one window over the tiny partials frame. Both sides
     * read the RAW x, so asking for both costs one bucketing, one
     * partials aggregation and one broadcast join; the within-bucket
-    * windows share partitioning+ordering (frames differ per window
-    * FUNCTION, which one WindowExec handles).
+    * windows share the bucket partitioning, so NOCB's mirrored order
+    * adds one sort and no exchange.
     */
   def nafill(df: DataFrame, xIn: Column, key: Column,
              locfOut: Option[String], nocbOut: Option[String],
@@ -824,7 +865,11 @@ object GlobalOrdered {
       "nafill needs a locf or a nocb output")
     val x = if (nanIsNa) graft.functions.Funcs.nanAsNa(xIn) else xIn
     val p = prep(df, key, asc = true, buckets, nullsFirst)
-    val w = bucketWindow(p.ords)
+    // last non-null up to the row along `ords`: LOCF in the sort's
+    // order, NOCB in the mirrored one (a prefix frame either way, so
+    // linear per bucket; both orders share the bucket partitioning)
+    def lastNonNull(ords: Seq[Column]): Column = last(x, ignoreNulls = true)
+      .over(bucketWindow(ords).rowsBetween(Window.unboundedPreceding, 0))
     // the carry struct's leading rank pins null-KEY rows to the side the
     // sort places them (a bare struct(key, x) would sort a null key
     // smallest even when the order puts the null block last)
@@ -834,15 +879,12 @@ object GlobalOrdered {
     // (out, carry column, extreme, carry frame over the partials,
     // within-bucket fill)
     val sides = locfOut.map(o => (o, "_carryL", (c: Column) => max(c),
-        priorBuckets,
-        last(x, ignoreNulls = true)
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)))).toSeq ++
+        priorBuckets, lastNonNull(p.ords))).toSeq ++
       nocbOut.map(o => (o, "_carryN", (c: Column) => min(c),
         partialsWindow.rowsBetween(1, Window.unboundedFollowing),
-        first(x, ignoreNulls = true)
-          .over(w.rowsBetween(0, Window.unboundedFollowing))))
-    val aggs = sides.map { case (_, n, agg, _, _) => agg(carry).as(n) }
-    val partials = p.b.groupBy(col(BKT).as("_b")).agg(aggs.head, aggs.tail: _*)
+        lastNonNull(p.ords.map(Windows.flipOrder))))
+    val partials = partialsOf(p.b, p.buckets,
+      sides.map { case (_, n, agg, _, _) => agg(carry).as(n) }: _*)
     val carries = partials.select(col("_b") +: sides.map {
       case (_, n, agg, frame, _) => agg(col(n)).over(frame).as(n) }: _*)
     val outs = sides.map { case (o, n, _, _, within) =>
@@ -877,11 +919,12 @@ object GlobalOrdered {
     * (no key value spans buckets), so ordering stays correct; callers
     * filter `!PH` after the window.
     */
-  private def phantomAugmented(b: DataFrame, ords: Seq[Column],
-                               nBefore: Int, nAfter: Int): DataFrame = {
+  private def phantomAugmented(p: Prepped, nBefore: Int,
+                               nAfter: Int): DataFrame = {
+    val Prepped(b, ords, _) = p
     val real = b.withColumn(PH, lit(false))
     if (nBefore <= 0 && nAfter <= 0) return real
-    val counts = b.groupBy(col(BKT).as("_b")).agg(count(lit(1)).as("_c"))
+    val counts = partialsOf(b, p.buckets, count(lit(1)).as("_c"))
     // rows in buckets strictly between s and d, for every ordered
     // nonempty pair: between(s,d) = cumIncl(d) − c(d) − cumIncl(s),
     // read off ONE prefix window over the tiny counts frame — the
@@ -932,7 +975,7 @@ object GlobalOrdered {
                         frame: (Int, Int))
                        (f: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
     val p = prep(df, key, asc, buckets, nullsFirst, tieAgnostic = true)
-    dropPhantoms(f(phantomAugmented(p.b, p.ords, -frame._1, frame._2), p.ords),
+    dropPhantoms(f(phantomAugmented(p, -frame._1, frame._2), p.ords),
       key, p)
   }
 
@@ -1107,11 +1150,12 @@ object GlobalOrdered {
   def rownumByRange(df: DataFrame, order: Seq[Column], out: String,
                     partitions: Int = 0): DataFrame = {
     require(order.nonEmpty, "rownumByRange needs order columns")
-    val sorted = df.repartitionByRange(effBuckets(df, partitions), order: _*)
+    val parts = effBuckets(df, partitions)
+    val sorted = df.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_graft_mid", monotonically_increasing_id())
       .withColumn(BKT, spark_partition_id())
-    val counts = sorted.groupBy(col(BKT).as("_b")).agg(count(lit(1)).as("_c"))
+    val counts = partialsOf(sorted, parts, count(lit(1)).as("_c"))
     val priors = priorsOf(counts, sum(col("_c")) -> "_pc")
     sorted.join(broadcast(priors), col(BKT) === col("_b"), "left")
       .withColumn(out,

@@ -230,7 +230,8 @@ object Joins {
     * Implementation (no Spark builtin): tag and union both sides, then a
     * single window pass per direction —
     * `last(value, ignoreNulls).over(partitionBy(by).orderBy(on, tag))`
-    * gives LOCF; the mirrored first() gives NOCB; nearest compares both.
+    * gives LOCF; the same over the mirrored order gives NOCB; nearest
+    * compares both.
     * One shuffle on `by`, streaming window evaluation, no per-row
     * lookups. SKEW CAVEAT: AQE skew splitting applies to sort-merge
     * joins, NOT to Window exchanges — a power-law `by` key (one key with
@@ -303,31 +304,36 @@ object Joins {
       asofUnion(x, i, by, on, valueColsIn, tieBreak)
 
     val tbOrder = tieBreak.indices.map(k => col(s"$tbPrefix$k").asc)
-    val wBack = Window.partitionBy(by.map(col): _*)
-      .orderBy(col(on).asc +: col(tag).asc +: tbOrder: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wFwd = Window.partitionBy(by.map(col): _*)
-      .orderBy(col(on).asc +: col(tag).desc +: tbOrder: _*)
-      .rowsBetween(0, Window.unboundedFollowing)
+    // both directions are the last non-null up to the row: backward in
+    // (on, tag, tieBreak) order, forward in the mirror of (on, tag desc,
+    // tieBreak) — every key, null placement and tie-break reversed, so
+    // NOCB still takes the first duplicate. A prefix frame streams; the
+    // suffix frame (0, unboundedFollowing) is re-evaluated per row.
+    def prefix(ords: Seq[Column]) = Window.partitionBy(by.map(col): _*)
+      .orderBy(ords: _*).rowsBetween(Window.unboundedPreceding, 0)
+    val wBack = prefix(col(on).asc +: col(tag).asc +: tbOrder)
+    val wFwd = prefix((col(on).asc +: col(tag).desc +: tbOrder)
+      .map(Windows.flipOrder))
 
     def filled(d: DataFrame, w: org.apache.spark.sql.expressions.WindowSpec,
-               pick: Column => Column, suffix: String): DataFrame =
-      aliases.foldLeft(d.withColumn(onX + suffix, pick(col(onX)).over(w))) {
-        (acc, a) => acc.withColumn(a + suffix, pick(col(a)).over(w))
+               suffix: String): DataFrame = {
+      def pick(c: String) = last(col(c), ignoreNulls = true).over(w)
+      aliases.foldLeft(d.withColumn(onX + suffix, pick(onX))) {
+        (acc, a) => acc.withColumn(a + suffix, pick(a))
       }
+    }
 
     val result = roll match {
       case Locf =>
         val (reStart, reEnd) = rollends.getOrElse((false, true))
         if (!reStart && reEnd) {
-          val f = filled(u, wBack, last(_, ignoreNulls = true), "_b")
+          val f = filled(u, wBack, "_b")
           f.filter(col(tag) === 1)
             .select((iCols.map(col) ++ aliases.zip(outNames).map {
               case (a, o) => col(a + "_b").as(o) }): _*)
         } else {
           // need both directions to detect/fill the edges
-          val f = filled(filled(u, wBack, last(_, ignoreNulls = true), "_b"),
-                         wFwd, first(_, ignoreNulls = true), "_f")
+          val f = filled(filled(u, wBack, "_b"), wFwd, "_f")
           val beforeFirst = col(onX + "_b").isNull   // no x at or before probe
           val afterLast = col(onX + "_f").isNull     // no x at or after probe
           f.filter(col(tag) === 1)
@@ -342,13 +348,12 @@ object Joins {
       case Nocb =>
         val (reStart, reEnd) = rollends.getOrElse((true, false))
         if (reStart && !reEnd) {
-          val f = filled(u, wFwd, first(_, ignoreNulls = true), "_f")
+          val f = filled(u, wFwd, "_f")
           f.filter(col(tag) === 1)
             .select((iCols.map(col) ++ aliases.zip(outNames).map {
               case (a, o) => col(a + "_f").as(o) }): _*)
         } else {
-          val f = filled(filled(u, wBack, last(_, ignoreNulls = true), "_b"),
-                         wFwd, first(_, ignoreNulls = true), "_f")
+          val f = filled(filled(u, wBack, "_b"), wFwd, "_f")
           val beforeFirst = col(onX + "_b").isNull
           val afterLast = col(onX + "_f").isNull
           f.filter(col(tag) === 1)
@@ -361,7 +366,7 @@ object Joins {
             }): _*)
         }
       case Limit(lim) =>
-        val f = filled(u, wBack, last(_, ignoreNulls = true), "_b")
+        val f = filled(u, wBack, "_b")
         val within = col(on).cast("double") - col(onX + "_b").cast("double") <= lit(lim)
         f.filter(col(tag) === 1)
           .select((iCols.map(col) ++
@@ -373,8 +378,7 @@ object Joins {
         // (src/bmerge.c:297-309: the extreme branches fire only when
         // rollends[k]).
         val (reStart, reEnd) = rollends.getOrElse((true, true))
-        val f = filled(filled(u, wBack, last(_, ignoreNulls = true), "_b"),
-                       wFwd, first(_, ignoreNulls = true), "_f")
+        val f = filled(filled(u, wBack, "_b"), wFwd, "_f")
         val beforeFirst = col(onX + "_b").isNull // probe precedes every x
         val afterLast = col(onX + "_f").isNull   // probe follows every x
         val pick = nearestPick(col(on), col(onX + "_b"), col(onX + "_f")) _
@@ -444,9 +448,12 @@ object Joins {
     val wInB = Window.partitionBy((by :+ bucket).map(col): _*)
       .orderBy(col(on).asc, col(tag).asc)
       .rowsBetween(Window.unboundedPreceding, 0)
+    // forward: the last non-null up to the row in the mirror of (on,
+    // tag desc) — a prefix frame, where (0, unboundedFollowing) would be
+    // re-evaluated per row
     val wInF = Window.partitionBy((by :+ bucket).map(col): _*)
-      .orderBy(col(on).asc, col(tag).desc)
-      .rowsBetween(0, Window.unboundedFollowing)
+      .orderBy(Seq(col(on).asc, col(tag).desc).map(Windows.flipOrder): _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
     val filledB =
       if (!needBack) u
       else cols.foldLeft(u)((acc, a) =>
@@ -454,7 +461,7 @@ object Joins {
     val filledIn =
       if (!needFwd) filledB
       else cols.foldLeft(filledB)((acc, a) =>
-        acc.withColumn(a + "_f", first(col(a), ignoreNulls = true).over(wInF)))
+        acc.withColumn(a + "_f", last(col(a), ignoreNulls = true).over(wInF)))
 
     // Pass 2 (bucket-summary scale): ONE aggregation computes, per
     // (by, bucket), the boundary NON-NULL value of each column among x

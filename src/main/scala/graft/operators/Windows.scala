@@ -355,13 +355,17 @@ object Windows {
       .over(spec(by, order, allowGlobal, "nafillLocf")
         .rowsBetween(Window.unboundedPreceding, 0))
 
-  /** nafill(type="nocb"): next non-missing carried backward. */
+  /** nafill(type="nocb"): next non-missing carried backward — the last
+    * non-missing up to the row in the mirrored order. A suffix frame
+    * `rowsBetween(0, unboundedFollowing)` would be re-evaluated for every
+    * row (quadratic per partition); the prefix frame streams.
+    */
   def nafillNocb(c: Column, by: Seq[String], order: Seq[Column],
                  allowGlobal: Boolean = false,
                  nanIsNa: Boolean = true): Column =
-    first(if (nanIsNa) Funcs.nanAsNa(c) else c, ignoreNulls = true)
-      .over(spec(by, order, allowGlobal, "nafillNocb")
-        .rowsBetween(0, Window.unboundedFollowing))
+    last(if (nanIsNa) Funcs.nanAsNa(c) else c, ignoreNulls = true)
+      .over(spec(by, order.map(flipOrder), allowGlobal, "nafillNocb")
+        .rowsBetween(Window.unboundedPreceding, 0))
 
   // ---- frank (src/frank.c ties enum) ----------------------------------
 

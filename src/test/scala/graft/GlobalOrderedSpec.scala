@@ -31,6 +31,12 @@ class GlobalOrderedSpec extends AnyFunSuite {
     df.select(col(key), col(out)).collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
 
+  // a partitionless window may only read bounded partials (the partials
+  // windows, rownumByRange's prior-partition counts)
+  private def noGlobalWindow(d: DataFrame): Unit =
+    assert(SparkTestSession.unboundedGlobalWindows(d).isEmpty,
+      s"partitionless WindowExec over unbounded input in:\n${d.queryExecution.sparkPlan}")
+
   test("cumsum matches the naive global window incl. NA poison, both naRm modes") {
     val df = fixture
     for (naRm <- Seq(false, true)) {
@@ -328,13 +334,6 @@ class GlobalOrderedSpec extends AnyFunSuite {
 
   test("DSL by=Nil entry points route to the tier and match their naive plans") {
     val df = fixture
-    def noGlobalWindow(d: DataFrame): Unit = {
-      val bad = d.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(bad.isEmpty, s"partitionless WindowExec in:\n${d.queryExecution.executedPlan}")
-    }
     // frankNa through the DSL == naive ranks (ties=last exercises the
     // round-11 GlobalOrdered tie method)
     for (ties <- Seq("min", "average", "last")) {
@@ -369,13 +368,6 @@ class GlobalOrderedSpec extends AnyFunSuite {
 
   test("grp/topK/shiftCyclic global paths carry no partitionless WindowExec") {
     val df = fixture
-    def noGlobalWindow(d: DataFrame): Unit = {
-      val bad = d.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(bad.isEmpty, s"partitionless WindowExec in:\n${d.queryExecution.executedPlan}")
-    }
     val g = Windows.grp(df, Seq("s"))
     noGlobalWindow(g)
     assert(g.select("s", "grp").distinct().collect()
@@ -595,5 +587,74 @@ class GlobalOrderedSpec extends AnyFunSuite {
         col("k"), buckets = 8))
     for ((name, out) <- forms)
       assert(out.columns.toSeq == cols :+ "m", name)
+  }
+
+  /** Stages run by one full execution of `df` (every row and column, as
+    * the benchmark materializes it), counted by a listener like the
+    * benchmark's `stages`.
+    */
+  private def stagesOf(df: DataFrame): Int = {
+    import org.apache.spark.sql.GraftSqlBridge.flushListenerBus
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        n.incrementAndGet()
+    }
+    flushListenerBus(sc, 10000)
+    sc.addSparkListener(l)
+    try { df.queryExecution.toRdd.count(); flushListenerBus(sc, 10000) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("q_cumsum_global runs 4 stages: the partials gather in their aggregate's stage") {
+    // bucket exchange map, partials map, partials final aggregate + prefix
+    // window + broadcast collect (ONE task, no SinglePartition exchange),
+    // result. The build runs the bounds fit, so it is not counted.
+    val df = SparkEntry.queries("q_cumsum_global")(spark, SparkTestSession.sfDir)
+    assert(stagesOf(df) == 4, df.queryExecution.executedPlan)
+    assert(!df.queryExecution.executedPlan.toString.contains("SinglePartition"),
+      df.queryExecution.executedPlan)
+  }
+
+  test("partials above one advisory partition stay distributed, same rows") {
+    // the gather guard: splits × buckets × partial-row bytes over
+    // spark.sql.adaptive.advisoryPartitionSizeInBytes keeps the final
+    // aggregate hash-distributed (each partials window then plans its own
+    // single-partition exchange); the rows must not depend on the side
+    import org.apache.spark.sql.execution.CoalesceExec
+    val df = fixture
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "cum" -> (() => GlobalOrdered.cum(df, col("v"), col("k"),
+        Seq(("sum", false, "a"), ("prod", true, "b")), buckets = 8)),
+      "frankMulti" -> (() => GlobalOrdered.frankMulti(df, col("v"),
+        desc = false, Seq(("min", "a"), ("dense", "b")), "true", buckets = 8)),
+      "rleid" -> (() => GlobalOrdered.rleid(df, Seq("s"), col("k"), "a",
+        buckets = 8)),
+      "nafill" -> (() => GlobalOrdered.nafill(df, col("v"), col("k"),
+        Some("a"), Some("b"), buckets = 8)),
+      "shiftMulti" -> (() => GlobalOrdered.shiftMulti(df,
+        Seq(("a", col("v"), 2, lit(null)), ("b", col("v"), -3, lit(null))),
+        col("k"), buckets = 8)),
+      "rownumByRange" -> (() => GlobalOrdered.rownumByRange(df,
+        Seq(col("k").asc), "a", partitions = 8)))
+    def coalesces(d: DataFrame): Int =
+      d.queryExecution.sparkPlan.collect { case c: CoalesceExec => c }.size
+    def rows(d: DataFrame): Seq[String] = d.collect().map(_.toString).sorted.toSeq
+    val gathered = ops.map { case (name, op) =>
+      val d = op()
+      assert(coalesces(d) > 0, s"$name: small partials not gathered")
+      name -> rows(d)
+    }
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try for (((name, op), (_, want)) <- ops.zip(gathered)) {
+      val d = op()
+      assert(coalesces(d) == 0, s"$name: gathered past the guard")
+      assert(rows(d) == want, name)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +22,19 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Partitionless WindowExecs of df's physical plan. The walk reads
+    * `sparkPlan`: under AQE `executedPlan` is an AdaptiveSparkPlanExec
+    * leaf, and a collect over it finds nothing.
+    */
+  def globalWindows(df: DataFrame): Seq[WindowExec] =
+    df.queryExecution.sparkPlan.collect {
+      case w: WindowExec if w.partitionSpec.forall(_.foldable) => w
+    }
+
+  /** Those over input that is not provably bounded: the one-task funnel. */
+  def unboundedGlobalWindows(df: DataFrame): Seq[WindowExec] =
+    globalWindows(df).filterNot(w => PlanLint.bounded(w.child))
 }
 
 /** Registry-backed temp files/dirs for tests (VERDICT_r16 item 5): every
@@ -1117,22 +1131,27 @@ class PlanShapeSpec extends AnyFunSuite {
       s"verify join should broadcast the bench gram set:\n$p")
   }
 
-  test("global ordered tier: NO partitionless WindowExec anywhere in the engine's plans") {
+  test("global ordered tier: a partitionless WindowExec only ever reads bounded partials") {
     // the round-10 lock: every by=Nil ordered query routes through
-    // GlobalOrdered's range-bucketed two-pass tier — a WindowExec with
-    // an empty partition spec (the single-partition funnel the driver
-    // log warns about) must never appear
+    // GlobalOrdered's range-bucketed two-pass tier, whose only
+    // partitionless windows run over the ≤ buckets rows of an aggregate.
+    import SparkTestSession.{globalWindows, unboundedGlobalWindows => unbounded}
+    // the check catches the naive global window over a table
+    val naive = spark.read.parquet(s"${SparkTestSession.sfDir}/events.parquet")
+      .withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy(col("event_id"))))
+    assert(unbounded(naive).nonEmpty, "naive global window not caught")
+    var seen = 0
     for (q <- Seq("q_cumsum_global", "q_cumprod_global", "q_rleid_global",
         "q_frank_global", "q_shift_global", "q_froll_global",
         "q_nafill_global", "q_grp", "q_ngrp", "q_topk")) {
       val df = SparkEntry.queries(q)(spark, SparkTestSession.sfDir)
-      val bad = df.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(bad.isEmpty,
-        s"$q: single-partition WindowExec:\n${df.queryExecution.executedPlan}")
+      seen += globalWindows(df).size
+      assert(unbounded(df).isEmpty,
+        s"$q: partitionless WindowExec over unbounded input:\n${df.queryExecution.sparkPlan}")
     }
+    // a walk that reaches no partials window checks nothing
+    assert(seen > 0, "no partitionless window found: the walk checks nothing")
   }
 
   test("q_curation_pipeline: kept-side dedup subtree is not duplicated into the drop list") {

@@ -69,6 +69,35 @@ class PlanLintSpec extends AnyFunSuite {
     assert(PlanLint.lint("planted_gw_ok", good).isEmpty)
   }
 
+  test("linter flags a suffix frame over unbounded input, accepts the mirrored prefix and bounded summaries") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val ev = spark.read.parquet(s"${SparkTestSession.sfDir}/events.parquet")
+    val byType = Window.partitionBy($"event_type")
+    def kinds(d: org.apache.spark.sql.DataFrame) = PlanLint.lint("planted_sf", d).map(_.kind)
+    // the former NOCB: next non-null from a suffix frame, re-evaluated per row
+    val suffix = ev.withColumn("nocb", first($"value", ignoreNulls = true)
+      .over(byType.orderBy($"event_id").rowsBetween(0, Window.unboundedFollowing)))
+    assert(kinds(suffix).contains("suffix-frame-over-unbounded"), kinds(suffix))
+    val strict = ev.withColumn("nx", min($"value")
+      .over(byType.orderBy($"event_id").rowsBetween(1, Window.unboundedFollowing)))
+    assert(kinds(strict).contains("suffix-frame-over-unbounded"), kinds(strict))
+    // the same carry as a prefix frame over the mirrored order streams
+    val mirrored = ev.withColumn("nocb", last($"value", ignoreNulls = true)
+      .over(byType.orderBy($"event_id".desc_nulls_last)
+        .rowsBetween(Window.unboundedPreceding, 0)))
+    assert(kinds(mirrored).isEmpty, kinds(mirrored))
+    // whole-partition frames are evaluated once per partition
+    val whole = ev.withColumn("t", sum($"value")
+      .over(byType.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    assert(kinds(whole).isEmpty, kinds(whole))
+    // over an aggregate's bounded output a suffix frame is allowed
+    val summary = ev.groupBy($"event_type").agg(count(lit(1)).as("c"))
+      .withColumn("after", sum($"c").over(Window.partitionBy(lit(0))
+        .orderBy($"event_type").rowsBetween(1, Window.unboundedFollowing)))
+    assert(kinds(summary).isEmpty, kinds(summary))
+  }
+
   // ---- pushdown + pruning lock (VERDICT r15 stretch #7) -----------------
   // A filter that stops reaching the parquet scan, or a scan that starts
   // reading every column, is invisible to sf0.001 timings but is the
