@@ -1131,7 +1131,7 @@ class PlanShapeSpec extends AnyFunSuite {
       s"verify join should broadcast the bench gram set:\n$p")
   }
 
-  test("global ordered tier: a partitionless WindowExec only ever reads bounded partials") {
+  test("global ordered tier: partitionless WindowExec only ever reads bounded partials") {
     // the round-10 lock: every by=Nil ordered query routes through
     // GlobalOrdered's range-bucketed two-pass tier, whose only
     // partitionless windows run over the ≤ buckets rows of an aggregate.
