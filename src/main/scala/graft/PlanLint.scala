@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{EnsureRequirements, Exchange}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, LocalLimitExec, LocalTableScanExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{CoalesceExec, CollectLimitExec, GlobalLimitExec, LocalLimitExec, LocalTableScanExec, TakeOrderedAndProjectExec}
 
 /** Sweep-wide physical-plan linter over the [[SparkEntry.queries]] registry.
   *
@@ -24,6 +25,12 @@ import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, LocalL
   *    Those partials are gathered into one task by `coalesce(1)` when
   *    they are small (`GlobalOrdered.partialsOf`); a CoalesceExec over
   *    an aggregate is as bounded as the aggregate;
+  *  - a CoalesceExec(1) whose task reads unbounded input: being narrow,
+  *    it runs everything down to its nearest exchange in one task, so
+  *    every node on that path must read bounded input. A gather over an
+  *    aggregate that planned its own exchange passes; one over an
+  *    aggregate reading a window's output (no exchange between them)
+  *    pulls the full-data sort and windows into the one task;
   *  - a SUFFIX frame — `rowsBetween(k, unboundedFollowing)` (or its
   *    range form) with k ≠ unboundedPreceding — over unbounded input,
   *    partitioned or not: Spark re-evaluates such a frame for every row,
@@ -32,7 +39,8 @@ import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, LocalL
   *
   * The linter walks `queryExecution.sparkPlan` (post-planning, pre-AQE —
   * AQE only ever *improves* these shapes at runtime, never introduces
-  * them) including subqueries. `PlanLintSpec` asserts zero violations
+  * them) including subqueries; the gather rule reads it with the
+  * planner's exchanges placed (`EnsureRequirements`). `PlanLintSpec` asserts zero violations
   * across the whole registry at sf0.001.
   */
 object PlanLint {
@@ -86,6 +94,12 @@ object PlanLint {
     case _ => false
   }
 
+  /** `p` and its descendants down to, not past, the nearest exchanges:
+    * the nodes that run in `p`'s tasks.
+    */
+  private def oneTask(p: SparkPlan): Seq[SparkPlan] =
+    p +: p.children.filterNot(_.isInstanceOf[Exchange]).flatMap(oneTask)
+
   private def globalPartition(partitionSpec: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Boolean =
     partitionSpec.forall(_.foldable) // empty, or constants like lit(0)
 
@@ -115,6 +129,15 @@ object PlanLint {
         out += Violation(query, "global-window-limit-over-unbounded", w.simpleStringWithNodeId())
       case w: WindowExec if w.windowExpression.exists(suffixFrame) && !bounded(w.child) =>
         out += Violation(query, "suffix-frame-over-unbounded", w.simpleStringWithNodeId())
+      case _ =>
+    }
+    // the gather rule needs the exchanges the planner places, which
+    // sparkPlan does not hold yet
+    EnsureRequirements().apply(plan).foreach {
+      case c: CoalesceExec if c.numPartitions == 1 =>
+        oneTask(c).find(n => !n.children.forall(bounded)).foreach(n =>
+          out += Violation(query, "gather-over-unbounded",
+            s"Coalesce 1's task runs ${n.nodeName} over unbounded input"))
       case _ =>
     }
     // Subquery plans (scalar subqueries etc.) get the same scrutiny.

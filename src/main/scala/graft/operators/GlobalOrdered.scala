@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
+import org.apache.spark.sql.execution.exchange.EnsureRequirements
 import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-safe GLOBAL ordered operators — the `by = Nil` tier of the
@@ -31,8 +33,9 @@ import org.apache.spark.sql.internal.SQLConf
   *     SPLIT, so up to splits × buckets rows shuffle. When that estimate
   *     fits one advisory partition ([[partialsOf]]) the final aggregate
   *     is gathered into one task, and it and every partials window run
-  *     in the broadcast job's own stage; above it the final aggregate
-  *     stays hash-distributed and the windows plan their own
+  *     in the broadcast job's own stage; above it, or when the partials
+  *     read rows already clustered on the bucket (rleid), the final
+  *     aggregate stays distributed and the windows plan their own
   *     single-partition exchange over the ≤ buckets aggregated rows.
   *
   * Ops that need neighboring ROWS rather than prefix aggregates
@@ -351,10 +354,10 @@ object GlobalOrdered {
     */
   private case class Prepped(b: DataFrame, ords: Seq[Column],
                              fit: Option[(Array[Any], Int)] = None) {
-    /** The fit's bucket count; a caller-supplied bucket expression
-      * ([[cumsumWith]]) is taken at the default ceiling.
+    /** The fit's bucket count; None for a caller-supplied bucket
+      * expression ([[cumsumWith]]), whose distinct values are unbounded.
       */
-    def buckets: Int = fit.fold(MAX_BUCKETS)(_._2)
+    def buckets: Option[Int] = fit.map(_._2)
   }
 
   /** Resolve the bucket/partition count: callers pass 0 (the default)
@@ -465,10 +468,12 @@ object GlobalOrdered {
     * the result is gathered with `coalesce(1)`: CoalesceExec(1) reports
     * SinglePartition, so the final aggregate and every partials window
     * over it run in one task of the broadcast job, with no exchange
-    * between them. Above it the final aggregate stays hash-distributed
-    * and each window plans its own single-partition exchange.
+    * between them. Above it, with no known bucket count, or when b is
+    * already clustered on the bucket ([[clusteredOnBucket]]) the final
+    * aggregate stays distributed and each window plans its own
+    * single-partition exchange.
     */
-  private def partialsOf(b: DataFrame, buckets: Int, aggs: Column*): DataFrame = {
+  private def partialsOf(b: DataFrame, buckets: Option[Int], aggs: Column*): DataFrame = {
     val partials = b.groupBy(col(BKT).as("_b")).agg(aggs.head, aggs.tail: _*)
     val conf = b.sparkSession.sessionState.conf
     val splits = BigInt(conf.numShufflePartitions).max(
@@ -477,8 +482,20 @@ object GlobalOrdered {
     // 8 bytes of row header over the schema's default field sizes
     val rowBytes = 8L + partials.schema.defaultSize
     val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (splits * buckets * rowBytes <= advisory) partials.coalesce(1)
+    val small = buckets.exists(n => splits * n * rowBytes <= advisory)
+    if (small && !clusteredOnBucket(b)) partials.coalesce(1)
     else partials
+  }
+
+  /** b's rows already arrive hash-clustered on the bucket (rleid's
+    * within-bucket windows): its aggregate plans no exchange of its own,
+    * and the narrow coalesce(1) would pull b's whole reduce side — the
+    * full-data sort and windows — into one task.
+    */
+  private def clusteredOnBucket(b: DataFrame): Boolean = {
+    val planned = EnsureRequirements().apply(b.queryExecution.sparkPlan)
+    planned.output.find(_.name == BKT).exists(a =>
+      planned.outputPartitioning.satisfies(ClusteredDistribution(Seq(a))))
   }
 
   /** The prefix/suffix window over the TINY partials frame (≤ buckets
@@ -651,6 +668,8 @@ object GlobalOrdered {
     * fit: no eager bounds job at all. The bucket must be non-decreasing
     * along the sort and null-safe (map null keys where the sort places
     * them); bucket balance only affects parallelism, never correctness.
+    * Its distinct values have no known bound, so the per-bucket partials
+    * always keep a distributed final aggregate ([[partialsOf]]).
     */
   def cumsumWith(df: DataFrame, x: Column, key: Column, bucket: Column,
                  out: String, asc: Boolean = true,
@@ -1155,7 +1174,7 @@ object GlobalOrdered {
       .sortWithinPartitions(order: _*)
       .withColumn("_graft_mid", monotonically_increasing_id())
       .withColumn(BKT, spark_partition_id())
-    val counts = partialsOf(sorted, parts, count(lit(1)).as("_c"))
+    val counts = partialsOf(sorted, Some(parts), count(lit(1)).as("_c"))
     val priors = priorsOf(counts, sum(col("_c")) -> "_pc")
     sorted.join(broadcast(priors), col(BKT) === col("_b"), "left")
       .withColumn(out,

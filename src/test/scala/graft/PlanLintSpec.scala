@@ -98,6 +98,25 @@ class PlanLintSpec extends AnyFunSuite {
     assert(kinds(summary).isEmpty, kinds(summary))
   }
 
+  test("linter flags a coalesce(1) whose task reads a window's output, accepts it over its own exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val ev = spark.read.parquet(s"${SparkTestSession.sfDir}/events.parquet")
+    def kinds(d: org.apache.spark.sql.DataFrame) = PlanLint.lint("planted_ga", d).map(_.kind)
+    // the aggregate reads a window already clustered on its key: no
+    // exchange between them, so the gather pulls the sort and window of
+    // every row into one task
+    val windowed = ev.withColumn("r", row_number()
+      .over(Window.partitionBy($"event_type").orderBy($"event_id")))
+    val overWindow = windowed.groupBy($"event_type").agg(max($"r").as("m")).coalesce(1)
+    assert(kinds(overWindow).contains("gather-over-unbounded"), kinds(overWindow))
+    assert(kinds(ev.coalesce(1)).contains("gather-over-unbounded"))
+    // the same aggregate over unclustered rows plans its own exchange:
+    // the gathered task reads only the partial aggregates
+    val overExchange = ev.groupBy($"event_type").agg(count(lit(1)).as("c")).coalesce(1)
+    assert(kinds(overExchange).isEmpty, kinds(overExchange))
+  }
+
   // ---- pushdown + pruning lock (VERDICT r15 stretch #7) -----------------
   // A filter that stops reaching the parquet scan, or a scan that starts
   // reading every column, is invisible to sf0.001 timings but is the
