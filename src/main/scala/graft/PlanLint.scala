@@ -40,8 +40,8 @@ import org.apache.spark.sql.execution.{CoalesceExec, CollectLimitExec, GlobalLim
   * The linter walks `queryExecution.sparkPlan` (post-planning, pre-AQE —
   * AQE only ever *improves* these shapes at runtime, never introduces
   * them) including subqueries; the gather rule reads it with the
-  * planner's exchanges placed (`EnsureRequirements`). `PlanLintSpec` asserts zero violations
-  * across the whole registry at sf0.001.
+  * planner's exchanges placed (`EnsureRequirements`). `PlanLintSpec`
+  * asserts zero violations across the whole registry at sf0.001.
   */
 object PlanLint {
 
